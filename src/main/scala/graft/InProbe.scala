@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Large-IN strategy probe: the SAME membership workload — `l_orderkey
@@ -20,17 +19,7 @@ object InProbe {
     val dir = args.headOption.getOrElse("/tmp/scale10")
     val nValues = args.lift(1).map(_.toInt).getOrElse(5000)
     val reps = args.lift(2).map(_.toInt).getOrElse(5)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
+    val spark = graft.core.SparkEnv.session(appName = "graft-inprobe")
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

@@ -1,12 +1,13 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Writes `.explain("formatted")` for a catalog subset to files —
   * the plan-shape evidence behind the optimization-round notes
   * (plans/rNN/<query>_{before,after}.txt). Pure tooling: no query is
-  * executed, only planned.
+  * executed, only planned — on the engine's own session
+  * ([[graft.core.SparkEnv.session]], `SPARK_GRAFT_CPUS` cores), so the
+  * dumps show the plans users get.
   *
   * Usage: `runMain graft.PlanDump <sfDir> <outDir> <suffix> <q1,...|headline|all>`
   */
@@ -20,17 +21,7 @@ object PlanDump {
       case "headline" => Bench.headline
       case csv        => csv.split(",").map(_.trim).filter(_.nonEmpty).toSeq
     }
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
+    val spark = graft.core.SparkEnv.session(appName = "graft-plandump")
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     names.foreach { n =>

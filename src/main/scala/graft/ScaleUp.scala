@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Corpus replicator for scale benching: writes an n× copy of a test
@@ -24,15 +24,7 @@ object ScaleUp {
     val Array(inDir, outDir, nStr) = args
     val n = nStr.toInt
     require(n >= 1, s"n must be >= 1, got $n")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.SparkEnv.session(appName = "graft-scaleup")
 
     // read through the ns→µs rebuild so scaled copies carry standard
     // µs timestamps any reader (and the oracle) handles directly

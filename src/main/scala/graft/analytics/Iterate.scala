@@ -268,7 +268,7 @@ object Iterate {
     //     (the q_triangles ORDER BY's range-partitioner sampling pass)
     //     re-reads shuffle files instead of regenerating every wedge.
     //
-    // 10× A/B (OptProbe3, median of 3, noop sink): 39.8 s plain →
+    // 10× A/B (OPTIMIZATION_r15.md, median of 3, noop sink): 39.8 s plain →
     // 13.7 s bloom → 13.1 s bloom+SHJ (a broadcast semi reads 10.5 s
     // on the unsorted shape but loses on the sorted query: 23.8 s vs
     // 16.2 s — the sampling pass regenerates the wedges a broadcast

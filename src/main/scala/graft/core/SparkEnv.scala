@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.SparkSession
+import graft.plans.GraftExtensions
 
 /** SparkSession factory for the graft engine.
   *
@@ -49,11 +50,31 @@ object SparkEnv {
       // TimestampType, not TIMESTAMP_NTZ — session TZ is UTC so the two
       // are value-identical, and NTZ breaks unix_micros at analysis time.
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // native engine expressions (minhash_slots, …)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      // native engine kernels (minhash_slots, …): mandatory, see below
+      .config("spark.sql.extensions", GraftExtensions.ClassName)
     extraConf.foreach { case (k, v) => b.config(k, v) }
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    requireKernels(spark.sparkContext.getConf.get("spark.sql.extensions", ""))
     spark
   }
+
+  /** The engine has one production path: library operators call the
+    * [[GraftExtensions]] kernels unconditionally, with no composed-
+    * builtin fallback. So a session without them is refused here, once,
+    * instead of failing later inside some operator's analysis — e.g.
+    * when `getOrCreate` hands back a session (or SparkContext) that was
+    * started without the extension: static confs cannot change after
+    * the fact. Every session on a SparkContext takes its extensions
+    * from that context's `spark.sql.extensions`, so the context conf
+    * is the check; asking the session's catalog instead would build
+    * its whole session state here, ~1 s of session start-up on a
+    * 4-core host, for the same answer.
+    */
+  private[graft] def requireKernels(extensionsConf: String): Unit =
+    if (!extensionsConf.split(",").map(_.trim).contains(GraftExtensions.ClassName))
+      throw new IllegalStateException(
+        "graft session lacks its native kernels (spark.sql.extensions = " +
+          s"'$extensionsConf'); build it with " +
+          s"spark.sql.extensions=${GraftExtensions.ClassName}")
 }

@@ -38,57 +38,27 @@ object Dedup {
 
   // ---------------------------------------------------------- MinHash
 
-  /** K-permutation MinHash signature from a precomputed per-shingle
-    * hash array: perm_i(s) = xxhash64(i, h(s)). The expensive STRING
-    * hashing happens once per shingle (higher-order-function lambdas
-    * run interpreted in Spark — hashing the strings k times was ~200×
-    * slower end-to-end); re-hashing the fixed-width longs k times is
-    * cheap and, unlike Kirsch-Mitzenmacher h1+i·h2, can't overflow
-    * under ANSI mode.
+  /** K-slot MinHash signature from per-shingle hashes: the native
+    * [[graft.plans.MinHashSlots]] expression (one fused codegen loop;
+    * per-slot avalanche permutations of each hash). Signatures — and
+    * therefore persisted [[DedupIndex]] band keys — are only comparable
+    * within this one hash family.
     */
-  def minHashFromHashes(hashes: Column, k: Int): Column =
-    array((0 until k).map(i =>
-      array_min(transform(hashes, h => xxhash64(lit(i), h)))): _*)
-
-  /** MinHash signature from per-shingle hashes, preferring the native
-    * [[graft.plans.MinHashSlots]] expression (one fused codegen loop)
-    * when the session carries GraftExtensions; otherwise the composed-
-    * builtin fallback above (same semantics as minhash_slots is not
-    * guaranteed — both are valid MinHash families, but signatures from
-    * the two paths must not be mixed in one run).
-    */
-  def minHashColumn(spark: org.apache.spark.sql.SparkSession,
-      hashes: Column, k: Int): Column =
-    if (graft.plans.GraftExtensions.available(spark))
-      call_function("minhash_slots", hashes, lit(k))
-    else minHashFromHashes(hashes, k)
+  def minHashColumn(hashes: Column, k: Int): Column =
+    call_function("minhash_slots", hashes, lit(k))
 
   /** Distinct shingle-set as 64-bit hashes, SORTED ascending — the
     * unit all near-dup math runs on. Native [[graft.plans.NgramHashes]]
-    * when available (tokens hashed once, windows mixed in a codegen
-    * loop — shingle strings never materialize); composed-builtin
-    * fallback otherwise. Sorted because verification Jaccard merge-
-    * walks pairs ([[jaccardColumn]]) — sorting costs O(len log len)
-    * once per DOC; hashing-based intersection costs an allocation per
-    * candidate PAIR, and pairs outnumber docs on any dup-heavy corpus.
-    * The two paths are different hash families: don't mix within a run.
+    * (tokens hashed once, windows mixed in a codegen loop — shingle
+    * strings never materialize). Sorted because verification Jaccard
+    * merge-walks pairs ([[jaccardColumn]]) — sorting costs
+    * O(len log len) once per DOC; hashing-based intersection costs an
+    * allocation per candidate PAIR, and pairs outnumber docs on any
+    * dup-heavy corpus.
     */
-  def shingleHashes(spark: org.apache.spark.sql.SparkSession,
-      text: Column, n: Int): Column =
-    if (graft.plans.GraftExtensions.available(spark))
-      call_function("ngram_hashes",
-        split(lower(trim(text)), "[\\s\\p{Punct}]+"), lit(n))
-    else sort_array(
-      transform(TextAnalysis.wordShingles(text, n), s => xxhash64(s)))
-
-  /** Column-form MinHash signature over word shingles (convenience;
-    * inside [[minHashNearDupPairs]] the hash array is materialized as
-    * a column so it evaluates once per row).
-    */
-  def minHashSignature(text: Column, shingleSize: Int = 5, k: Int = 32): Column =
-    minHashFromHashes(
-      transform(TextAnalysis.wordShingles(text, shingleSize),
-        s => xxhash64(s)), k)
+  def shingleHashes(text: Column, n: Int): Column =
+    call_function("ngram_hashes",
+      split(lower(trim(text)), "[\\s\\p{Punct}]+"), lit(n))
 
   /** LSH band keys from a MinHash signature: `bands` hashes, each over
     * `rows = k/bands` consecutive signature slots. Two docs sharing ANY
@@ -117,7 +87,6 @@ object Dedup {
     // them; pairs inside them are only lost if they share NO other
     // non-hot band (probability (1-j²)^15 per remaining band).
     val rows = k / bands
-    val spark = df.sparkSession
     // Materialize (id, shingles) ONCE (eager local checkpoint, the
     // caller-owned-storage pattern of [[nearDupClusters]]): the plan
     // references it three times — signature/banding plus both sides of
@@ -131,7 +100,7 @@ object Dedup {
     // once" shape.
     val shingled = df.select(
       col(idCol).as("id"),
-      shingleHashes(spark, col(textCol), shingleSize).as("shingles"))
+      shingleHashes(col(textCol), shingleSize).as("shingles"))
       .localCheckpoint(eager = true)
     // The band join carries ONLY (id, band) — shingle arrays never ride
     // the candidate-generation shuffle — and candidate pairs are
@@ -139,7 +108,7 @@ object Dedup {
     // instead of once per shared band. At corpus scale this is the
     // difference between shuffling ids and shuffling the corpus.
     val banded = shingled
-      .withColumn("sig", minHashColumn(spark, col("shingles"), k))
+      .withColumn("sig", minHashColumn(col("shingles"), k))
       .select(col("id"),
         posexplode(lshBandKeys(col("sig"), bands, rows)).as(Seq("band_idx", "band_key")))
     val capped = banded
@@ -161,7 +130,7 @@ object Dedup {
       .join(shingled.select(col("id").as("id_b"), col("shingles").as("sh_b")),
         Seq("id_b"))
       .select(col("id_a"), col("id_b"),
-        jaccardColumn(spark, col("sh_a"), col("sh_b")).as("jaccard"))
+        jaccardColumn(col("sh_a"), col("sh_b")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }
 
@@ -188,10 +157,9 @@ object Dedup {
       shingleSize: Int = 5, k: Int = 32, bands: Int = 16,
       threshold: Double = 0.6, maxBucketSize: Int = 100): DataFrame = {
     val rows = k / bands
-    val spark = newDocs.sparkSession
     def prep(df: DataFrame, isNew: Boolean) =
       df.select(col(idCol).as("id"),
-        shingleHashes(spark, col(textCol), shingleSize).as("shingles"),
+        shingleHashes(col(textCol), shingleSize).as("shingles"),
         lit(isNew).as("is_new"))
     // same three-reference shape as [[minHashNearDupPairs]] — one eager
     // materialization instead of three tokenize+hash passes
@@ -199,7 +167,7 @@ object Dedup {
       .unionByName(prep(corpus, isNew = false))
       .localCheckpoint(eager = true)
     val banded = shingled
-      .withColumn("sig", minHashColumn(spark, col("shingles"), k))
+      .withColumn("sig", minHashColumn(col("shingles"), k))
       .select(col("id"), col("is_new"),
         posexplode(lshBandKeys(col("sig"), bands, rows))
           .as(Seq("band_idx", "band_key")))
@@ -228,7 +196,7 @@ object Dedup {
       .join(shingled.select(col("id").as("id_b"), col("shingles").as("sh_b")),
         Seq("id_b"))
       .select(col("id_a"), col("id_b"),
-        jaccardColumn(spark, col("sh_a"), col("sh_b")).as("jaccard"))
+        jaccardColumn(col("sh_a"), col("sh_b")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }
 
@@ -241,15 +209,11 @@ object Dedup {
 
   /** Verification Jaccard over SORTED-distinct hash arrays (what
     * [[shingleHashes]] produces): the native merge-walk kernel
-    * ([[graft.plans.JaccardSorted]]) when the session carries
-    * GraftExtensions, else the composed set form — identical results
+    * ([[graft.plans.JaccardSorted]]) — identical results to [[jaccard]]
     * (small integer counts divided in double precision).
     */
-  def jaccardColumn(spark: org.apache.spark.sql.SparkSession,
-      a: Column, b: Column): Column =
-    if (graft.plans.GraftExtensions.available(spark))
-      call_function("jaccard_sorted", a, b)
-    else jaccard(a, b)
+  def jaccardColumn(a: Column, b: Column): Column =
+    call_function("jaccard_sorted", a, b)
 
   /** All-pairs n-gram Jaccard within a bounded scope (the brute-force
     * verifier / small-corpus path; LSH above is the scale path).
@@ -257,12 +221,12 @@ object Dedup {
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
       shingleSize: Int, minJaccard: Double): DataFrame = {
     val sh = df.select(col(idCol).as("id"),
-      shingleHashes(df.sparkSession, col(textCol), shingleSize).as("sh"))
+      shingleHashes(col(textCol), shingleSize).as("sh"))
     val a = sh.select(col("id").as("id_a"), col("sh").as("sh_a"))
     val b = sh.select(col("id").as("id_b"), col("sh").as("sh_b"))
     a.crossJoin(b).filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
-        jaccardColumn(df.sparkSession, col("sh_a"), col("sh_b")).as("jaccard"))
+        jaccardColumn(col("sh_a"), col("sh_b")).as("jaccard"))
       .filter(col("jaccard") >= minJaccard)
   }
 
@@ -291,7 +255,7 @@ object Dedup {
       shingleSize: Int, minJaccard: Double): DataFrame =
     setSimPairsOnSets(
       df.select(col(idCol).as("id"),
-        shingleHashes(df.sparkSession, col(textCol), shingleSize).as("sh")),
+        shingleHashes(col(textCol), shingleSize).as("sh")),
       minJaccard)
 
   /** [[setSimJoinPrefix]]'s core over precomputed shingle-hash sets
@@ -382,7 +346,7 @@ object Dedup {
       .join(sh.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
       .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
       .select(col("id_a"), col("id_b"),
-        jaccardColumn(spark, col("sh_a"), col("sh_b")).as("jaccard"))
+        jaccardColumn(col("sh_a"), col("sh_b")).as("jaccard"))
       .filter(col("jaccard") >= minJaccard)
       // materialize the (bounded) verified pairs so the corpus-sized
       // shingle cache can be released before returning — a long
@@ -420,9 +384,8 @@ object Dedup {
   def setSimTopKPrefix(df: DataFrame, idCol: String, textCol: String,
       shingleSize: Int, minJaccard: Double, k: Int): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    val spark = df.sparkSession
     val sh = df.select(col(idCol).as("id"),
-        shingleHashes(spark, col(textCol), shingleSize).as("sh"))
+        shingleHashes(col(textCol), shingleSize).as("sh"))
       .filter(size(col("sh")) > 0)
     val classes = sh.groupBy(col("sh")).agg(
         min(col("id")).as("cid"),
@@ -479,17 +442,13 @@ object Dedup {
     }.reduce(_ + _)
   }
 
-  /** [[simHash]] preferring the native `simhash64` expression (one
-    * counter pass vs 64 interpreted aggregate passes) when the session
-    * carries GraftExtensions. Both paths compute the identical
+  /** [[simHash]] through the native `simhash64` expression (one
+    * counter pass vs 64 interpreted aggregate passes): the identical
     * signature (same token hashes, same sign rule).
     */
-  def simHashColumn(spark: org.apache.spark.sql.SparkSession,
-      text: Column): Column = {
-    if (graft.plans.GraftExtensions.available(spark)) {
-      val toks = array_distinct(split(lower(trim(text)), "[\\s\\p{Punct}]+"))
-      call_function("simhash64", transform(toks, t => xxhash64(t)))
-    } else simHash(text)
+  def simHashColumn(text: Column): Column = {
+    val toks = array_distinct(split(lower(trim(text)), "[\\s\\p{Punct}]+"))
+    call_function("simhash64", transform(toks, t => xxhash64(t)))
   }
 
   /** Hamming distance between two 64-bit signatures. */
@@ -505,7 +464,7 @@ object Dedup {
       maxDistance: Int = 3, maxBucketSize: Int = 1000): DataFrame =
     signatureNearDupPairs(
       df.select(col(idCol).as("id"),
-        simHashColumn(df.sparkSession, col(textCol)).as("sig")),
+        simHashColumn(col(textCol)).as("sig")),
       "id", "sig", maxDistance, maxBucketSize)
 
   /** Hamming near-dup pairs over PRECOMPUTED 64-bit signatures — the

@@ -66,11 +66,10 @@ object DedupIndex {
     * Returns (bands df, shingles df). */
   private def signAndBand(df: DataFrame, idCol: String, textCol: String,
       p: Params): (DataFrame, DataFrame) = {
-    val spark = df.sparkSession
     val shingled = df.select(col(idCol).as("id"),
-      Dedup.shingleHashes(spark, col(textCol), p.shingleSize).as("shingles"))
+      Dedup.shingleHashes(col(textCol), p.shingleSize).as("shingles"))
     val banded = shingled
-      .withColumn("sig", Dedup.minHashColumn(spark, col("shingles"), p.k))
+      .withColumn("sig", Dedup.minHashColumn(col("shingles"), p.k))
       .select(col("id"),
         posexplode(Dedup.lshBandKeys(col("sig"), p.bands, p.k / p.bands))
           .as(Seq("band_idx", "band_key")))
@@ -103,7 +102,6 @@ object DedupIndex {
       textCol: String, threshold: Double = 0.6,
       onPairs: DataFrame => Unit = _ => ()): DataFrame = {
     val p = readParams(wh, name)
-    val spark = newDocs.sparkSession
     // membership = presence in BANDS (the table appended last): ids a
     // crash left shingles-only rerun here and get repaired
     val fresh = ScaleJoins.bloomPrunedAntiJoin(
@@ -116,11 +114,11 @@ object DedupIndex {
     // both appends) reuses the checkpointed results — without this the
     // batch would be re-shingled+re-signed ~4 times
     val newShingles = fresh.select(col(idCol).as("id"),
-      Dedup.shingleHashes(spark, col(textCol), p.shingleSize)
+      Dedup.shingleHashes(col(textCol), p.shingleSize)
         .as("shingles"))
       .localCheckpoint()
     val newBands = newShingles
-      .withColumn("sig", Dedup.minHashColumn(spark, col("shingles"), p.k))
+      .withColumn("sig", Dedup.minHashColumn(col("shingles"), p.k))
       .select(col("id"),
         posexplode(Dedup.lshBandKeys(col("sig"), p.bands, p.k / p.bands))
           .as(Seq("band_idx", "band_key")))

@@ -1,6 +1,7 @@
 package graft.io
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Readers/writers + format dispatch for the graft engine.
   *
@@ -44,22 +45,38 @@ object Tables {
     * 1024 entries ≫ any working set of distinct live tables; eviction
     * only ever costs a re-probe of two parquet footers.
     */
-  private[io] var MetaCacheMaxEntries = 1024 // var: tests shrink it to prove eviction
-  private val metaCache: java.util.Map[
-      String, (org.apache.spark.sql.types.StructType, Seq[String])] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[
-          String, (org.apache.spark.sql.types.StructType, Seq[String])](
-          64, 0.75f, true) {
-        override def removeEldestEntry(e: java.util.Map.Entry[
-            String, (org.apache.spark.sql.types.StructType, Seq[String])])
-            : Boolean = size() > MetaCacheMaxEntries
-      })
+  private val metaCache = new MetaCache(1024)
 
-  private[io] def metaCacheSize: Int = metaCache.size()
+  /** LRU map of parquet metadata with an instance-owned bound. A miss
+    * infers OUTSIDE the lock — inference is a footer read and possibly
+    * a Spark job, and holding one session-wide lock across it would
+    * serialize every concurrent `readParquet`. Two readers racing on
+    * one cold key may both infer; the first insert wins.
+    */
+  private[io] final class MetaCache(maxEntries: Int) {
+    private type Meta = (StructType, Seq[String])
+    private val entries = new java.util.LinkedHashMap[String, Meta](
+        64, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[String, Meta]): Boolean =
+        this.size() > maxEntries
+    }
 
-  private def parquetMeta(spark: SparkSession,
-      path: String): (org.apache.spark.sql.types.StructType, Seq[String]) = {
+    def size: Int = entries.synchronized(entries.size())
+
+    def getOrLoad(key: String)(load: => Meta): Meta = {
+      val hit = entries.synchronized(entries.get(key))
+      if (hit != null) hit
+      else {
+        val loaded = load
+        val raced = entries.synchronized(entries.putIfAbsent(key, loaded))
+        if (raced != null) raced else loaded
+      }
+    }
+  }
+
+  private def parquetMeta(spark: SparkSession, path: String,
+      cache: MetaCache): (StructType, Seq[String]) = {
     import org.apache.hadoop.fs.Path
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -71,13 +88,10 @@ object Tables {
       "spark.sql.parquet.inferTimestampNTZ.enabled",
       "spark.sql.caseSensitive").map(k =>
       spark.conf.getOption(k).getOrElse("")).mkString(",")
-    val key =
-      if (st == null) null
-      else s"$path|${st.getModificationTime}|${st.getLen}|$confKey"
-    if (key == null) // missing path: let the plain reader raise its error
-      (spark.read.parquet(path).schema, nanoTimestampColumns(spark, path))
-    else metaCache.computeIfAbsent(key, _ =>
-      (spark.read.parquet(path).schema, nanoTimestampColumns(spark, path)))
+    def infer = (spark.read.parquet(path).schema, nanoTimestampColumns(spark, path))
+    if (st == null) infer // missing path: let the plain reader raise its error
+    else cache.getOrLoad(
+      s"$path|${st.getModificationTime}|${st.getLen}|$confKey")(infer)
   }
 
   /** Parquet read that tolerates TIMESTAMP(NANOS) columns, which the
@@ -88,8 +102,12 @@ object Tables {
     * ns→µs truncation matches what any µs-resolution consumer (DuckDB
     * included) observes.
     */
-  def readParquet(spark: SparkSession, path: String): DataFrame = {
-    val (schema, nsCols) = parquetMeta(spark, path)
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    readParquet(spark, path, metaCache)
+
+  private[io] def readParquet(spark: SparkSession, path: String,
+      cache: MetaCache): DataFrame = {
+    val (schema, nsCols) = parquetMeta(spark, path, cache)
     val df = spark.read.schema(schema).parquet(path)
     val rebuilt = nsCols.foldLeft(df) { (d, c) =>
       // `div` is integral long division. `/` on longs is double division,

@@ -84,7 +84,7 @@ object Cms {
   def sketch(key: Column, eps: Double, confidence: Double, seed: Int): Column =
     call_function("count_min_sketch", key, lit(eps), lit(confidence), lit(seed))
 
-  /** Point estimate; requires a session built with GraftExtensions. */
+  /** Point estimate via the native `cms_query` kernel. */
   def query(sketch: Column, key: Column): Column =
     call_function("cms_query", sketch, key)
 }

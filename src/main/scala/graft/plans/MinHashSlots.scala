@@ -1,10 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -84,160 +81,4 @@ case class MinHashSlots(child: Expression, k: Int)
 
   override protected def withNewChildInternal(newChild: Expression): MinHashSlots =
     copy(child = newChild)
-}
-
-/** Engine extensions — registered via
-  * `spark.sql.extensions=graft.plans.GraftExtensions` (set by
-  * SparkEnv/Verify/Bench session builders). SQL surface:
-  * `minhash_slots(array<bigint>, k)`.
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("minhash_slots"),
-      new ExpressionInfo(classOf[MinHashSlots].getName, "minhash_slots"),
-      (children: Seq[Expression]) => children match {
-        case Seq(arr, Literal(kv: Int, IntegerType)) => MinHashSlots(arr, kv)
-        case _ => throw new IllegalArgumentException(
-          "usage: minhash_slots(array<bigint>, <int literal k>)")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("ngram_hashes"),
-      new ExpressionInfo(classOf[NgramHashes].getName, "ngram_hashes"),
-      (children: Seq[Expression]) => children match {
-        case Seq(arr, Literal(nv: Int, IntegerType)) => NgramHashes(arr, nv)
-        case _ => throw new IllegalArgumentException(
-          "usage: ngram_hashes(array<string>, <int literal n>)")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("in_set_count"),
-      new ExpressionInfo(classOf[InSetCount].getName, "in_set_count"),
-      (children: Seq[Expression]) => children match {
-        // probe set must be plan-time foldable: it is evaluated HERE
-        // and baked into the expression as a sorted long[]
-        case Seq(arr, probes) if probes.foldable &&
-            probes.dataType.isInstanceOf[ArrayType] =>
-          val data = probes.eval(null).asInstanceOf[ArrayData]
-          InSetCount(arr, data.toLongArray().toSeq)
-        case _ => throw new IllegalArgumentException(
-          "usage: in_set_count(array<bigint>, <foldable array<bigint>>)")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("ngram_hashes_pos"),
-      new ExpressionInfo(classOf[NgramHashes].getName, "ngram_hashes_pos"),
-      (children: Seq[Expression]) => children match {
-        case Seq(arr, Literal(nv: Int, IntegerType)) =>
-          NgramHashes(arr, nv, positional = true)
-        case _ => throw new IllegalArgumentException(
-          "usage: ngram_hashes_pos(array<string>, <int literal n>)")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-      (children: Seq[Expression]) => children match {
-        case Seq(arr) => SimHash64(arr)
-        case _ => throw new IllegalArgumentException(
-          "usage: simhash64(array<bigint>)")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("int8_quantize"),
-      new ExpressionInfo(classOf[Int8Quantize].getName, "int8_quantize"),
-      (children: Seq[Expression]) => children match {
-        case Seq(arr) => Int8Quantize(arr)
-        case _ => throw new IllegalArgumentException(
-          "usage: int8_quantize(array<float|double>)")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("int8_cosine"),
-      new ExpressionInfo(classOf[Int8Cosine].getName, "int8_cosine"),
-      (children: Seq[Expression]) => children match {
-        case Seq(a, b) => Int8Cosine(a, b)
-        case _ => throw new IllegalArgumentException(
-          "usage: int8_cosine(array<tinyint>, array<tinyint>)")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("vec_cosine"),
-      new ExpressionInfo(classOf[VecCosine].getName, "vec_cosine"),
-      (children: Seq[Expression]) => children match {
-        case Seq(a, b) => VecCosine(a, b)
-        case _ => throw new IllegalArgumentException(
-          "usage: vec_cosine(array<float|double>, array<float|double>)")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("jaccard_sorted"),
-      new ExpressionInfo(classOf[JaccardSorted].getName, "jaccard_sorted"),
-      (children: Seq[Expression]) => children match {
-        case Seq(a, b) => JaccardSorted(a, b)
-        case _ => throw new IllegalArgumentException(
-          "usage: jaccard_sorted(array<bigint>, array<bigint>)")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("space_saving_topk"),
-      new ExpressionInfo(classOf[SpaceSavingTopK].getName, "space_saving_topk"),
-      (children: Seq[Expression]) => children match {
-        case Seq(c, Literal(kv: Int, IntegerType)) => SpaceSavingTopK(c, kv)
-        case _ => throw new IllegalArgumentException(
-          "usage: space_saving_topk(col, <int literal k>)")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("bottom_k_sample"),
-      new ExpressionInfo(classOf[BottomKSample].getName, "bottom_k_sample"),
-      (children: Seq[Expression]) => children match {
-        case Seq(v, p, Literal(kv: Int, IntegerType)) => BottomKSample(v, p, kv)
-        case _ => throw new IllegalArgumentException(
-          "usage: bottom_k_sample(value, priority, <int literal k>)")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("cms_query"),
-      new ExpressionInfo(classOf[CmsQuery].getName, "cms_query"),
-      (children: Seq[Expression]) => children match {
-        case Seq(sketch, key) => CmsQuery(sketch, key)
-        case _ => throw new IllegalArgumentException(
-          "usage: cms_query(sketch_binary, key)")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("bloom_agg"),
-      new ExpressionInfo(classOf[BloomAggregate].getName, "bloom_agg"),
-      (children: Seq[Expression]) => children match {
-        case Seq(c, Literal(n: Long, LongType)) => BloomAggregate(c, n)
-        case Seq(c, Literal(n: Int, IntegerType)) => BloomAggregate(c, n.toLong)
-        case _ => throw new IllegalArgumentException(
-          "usage: bloom_agg(col, <integer literal expectedItems>)")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("jaro_winkler"),
-      new ExpressionInfo(classOf[JaroWinklerSim].getName, "jaro_winkler"),
-      (children: Seq[Expression]) => children match {
-        case Seq(a, b) => JaroWinklerSim(a, b)
-        case _ => throw new IllegalArgumentException(
-          "usage: jaro_winkler(string, string)")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("bloom_might_contain"),
-      new ExpressionInfo(classOf[BloomMightContain].getName, "bloom_might_contain"),
-      (children: Seq[Expression]) => children match {
-        case Seq(bf, key) => BloomMightContain(bf, key)
-        case _ => throw new IllegalArgumentException(
-          "usage: bloom_might_contain(filter_binary, key)")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("profile_col"),
-      new ExpressionInfo(classOf[ColumnProfileAgg].getName, "profile_col"),
-      (children: Seq[Expression]) => children match {
-        case Seq(c) => ColumnProfileAgg(c)
-        case _ => throw new IllegalArgumentException("usage: profile_col(col)")
-      }))
-    // opt-in via spark.graft.rewriteLargeIn=true
-    ext.injectOptimizerRule(spark => LargeInToSemiJoin(spark))
-  }
-}
-
-object GraftExtensions {
-  val ConfKey = "spark.sql.extensions"
-  val ClassName = "graft.plans.GraftExtensions"
-
-  /** Is the native function available in this session? (Sessions not
-    * built with the extension fall back to composed builtins.) */
-  def available(spark: SparkSession): Boolean =
-    spark.catalog.functionExists("minhash_slots")
 }

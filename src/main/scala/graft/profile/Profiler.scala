@@ -143,13 +143,10 @@ object Profiler {
   /** Single-buffer fast path: one `profile_col` TypedImperativeAggregate
     * per column + HLL distinct — one scan, no Expand (the exact
     * multi-column countDistinct in [[profile]] replicates input rows
-    * once per distinct aggregate). Requires a session with
-    * GraftExtensions; metric semantics match [[profile]] except
-    * distinctCount is approximate.
+    * once per distinct aggregate). Metric semantics match [[profile]]
+    * except distinctCount is approximate.
     */
   def profileFast(df: DataFrame): Seq[ColumnProfile] = {
-    require(graft.plans.GraftExtensions.available(df.sparkSession),
-      "profileFast needs GraftExtensions (spark.sql.extensions)")
     val fields = df.schema.fields.toSeq
     val aggs = fields.flatMap { f =>
       // non-numeric columns profile through their SQL string form so

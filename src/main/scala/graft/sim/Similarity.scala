@@ -26,21 +26,17 @@ object Similarity {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  /** Cosine similarity; 0.0 when either vector is all-zero. Prefers
-    * the native `vec_cosine` expression (ONE codegen loop for dot +
-    * both norms vs three interpreted higher-order-function walks —
-    * this expression IS the brute-force/IVF scan's work) when the
-    * active session carries GraftExtensions; both paths accumulate
-    * left-to-right in double precision and produce bit-identical
-    * results, so plans are interchangeable under the oracles.
+  /** Cosine similarity; 0.0 when either vector is all-zero. The
+    * native `vec_cosine` expression: ONE codegen loop for dot + both
+    * norms vs three interpreted higher-order-function walks — this
+    * expression IS the brute-force/IVF scan's work. Bit-identical to
+    * [[cosineComposed]] (both accumulate left-to-right in double
+    * precision).
     */
-  def cosine(a: Column, b: Column): Column =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .filter(graft.plans.GraftExtensions.available)
-      .map(_ => call_function("vec_cosine", a, b))
-      .getOrElse(cosineComposed(a, b))
+  def cosine(a: Column, b: Column): Column = call_function("vec_cosine", a, b)
 
-  /** Composed-builtin cosine (the no-extension fallback). */
+  /** Composed-builtin cosine: the reference form [[cosine]] is pinned
+    * against. */
   def cosineComposed(a: Column, b: Column): Column = {
     val d = norm(a) * norm(b)
     when(d === 0, lit(0.0)).otherwise(dot(a, b) / d)

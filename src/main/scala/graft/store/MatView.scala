@@ -17,9 +17,8 @@ import org.apache.spark.sql.functions._
   *                       so the incremental estimate is BIT-IDENTICAL
   *                       to a one-shot build, not merely close
   *  - `bottomk`        → KMV quantile sample over `src` prioritized
-  *                       by `aux` ([[graft.plans.BottomKSample]];
-  *                       needs a GraftExtensions session) — min-k
-  *                       under union is a set op, so the incremental
+  *                       by `aux` ([[graft.plans.BottomKSample]]) —
+  *                       min-k under union is a set op, so the incremental
   *                       sample is bit-identical to one-shot too
   */
 final case class MvMeasure(kind: String, src: String = "",

@@ -49,17 +49,13 @@ object ScaleJoins {
     *
     * Composite keys probe as one `xxhash64(keys…)` long on both sides
     * (a hash collision is just one more false positive). Probing uses
-    * the native `bloom_might_contain` (GraftExtensions); a session
-    * without it degrades to no pruning. `expectedItems` sizes the
-    * filter — pass the small side's (approximate) distinct key count.
+    * the native [[graft.plans.BloomMightContainBcast]] over a broadcast
+    * filter. `expectedItems` sizes the filter — pass the small side's
+    * (approximate) distinct key count.
     */
   def bloomPruned(small: DataFrame, big: DataFrame, keys: Seq[String],
       expectedItems: Long, fpp: Double = 0.01): DataFrame = {
     require(keys.nonEmpty, "bloomPruned needs at least one key column")
-    // pruning is an optimization — a session without GraftExtensions
-    // (no bloom_might_contain) just skips it
-    if (!big.sparkSession.catalog.functionExists("bloom_might_contain"))
-      return big
     // single string/integral keys probe directly; anything else
     // (composite, timestamp, decimal…) folds to one xxhash64 long
     val direct = keys.size == 1 &&

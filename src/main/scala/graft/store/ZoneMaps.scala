@@ -84,9 +84,8 @@ object ZoneMaps {
     * columns — min/max intervals are useless when every file spans the
     * whole key domain (uuid-ish ids, user keys); a per-file Bloom
     * filter answers "could this file contain key k" with exact NOs.
-    * Built with the grouped [[graft.plans.BloomAggregate]] (needs a
-    * GraftExtensions session); one aggregation pass, O(files ·
-    * filterBytes) manifest.
+    * Built with the grouped [[graft.plans.BloomAggregate]]; one
+    * aggregation pass, O(files · filterBytes) manifest.
     */
   def buildBloomManifest(spark: SparkSession, path: String, c: String,
       expectedPerFile: Long): DataFrame = {
@@ -122,29 +121,13 @@ object ZoneMaps {
   }
 
   /** Files whose Bloom filter might contain `value` — the collected
-    * (file-name-sized) form of [[pruneFilesMightContainDf]]. Needs a
-    * GraftExtensions session (`bloom_might_contain`) for the
-    * distributed probe; a plain session falls back to the driver-side
-    * probe (acceptable only at test-scale manifests — building a
-    * bloom manifest already required the extension).
+    * (file-name-sized) form of [[pruneFilesMightContainDf]]: the probe
+    * runs on executors, only matching file names reach the driver.
     */
   def pruneFilesMightContain(manifest: DataFrame, c: String,
       value: Any): Seq[String] =
-    if (manifest.sparkSession.catalog.functionExists("bloom_might_contain"))
-      pruneFilesMightContainDf(manifest, c, value)
-        .collect().map(_.getString(0)).toSeq
-    else {
-      import org.apache.spark.util.sketch.BloomFilter
-      manifest.select("file", s"${c}_bloom").collect().filter { r =>
-        val bf = BloomFilter.readFrom(
-          new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))
-        value match {
-          case s: String => bf.mightContainString(s)
-          case n: Number => bf.mightContainLong(n.longValue())
-          case other => bf.mightContainBinary(other.toString.getBytes("UTF-8"))
-        }
-      }.map(_.getString(0)).toSeq
-    }
+    pruneFilesMightContainDf(manifest, c, value)
+      .collect().map(_.getString(0)).toSeq
 
   /** Equality scan through the Bloom manifest + exact residual filter
     * — always equal to the full scan-plus-filter (NOs are exact).

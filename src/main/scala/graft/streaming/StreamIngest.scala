@@ -366,9 +366,6 @@ object StreamIngest {
   def windowedTopK(df: DataFrame, timeCol: String, keyCol: String, k: Int,
       windowLen: String = "1 hour",
       watermarkDelay: String = "30 minutes"): DataFrame = {
-    require(df.sparkSession.catalog.functionExists("space_saving_topk"),
-      "windowedTopK needs GraftExtensions (space_saving_topk); build the " +
-        "session with spark.sql.extensions=graft.plans.GraftExtensions")
     df.withWatermark(timeCol, watermarkDelay)
       .groupBy(window(col(timeCol), windowLen))
       .agg(call_function("space_saving_topk", col(keyCol), lit(k)).as("tops"))

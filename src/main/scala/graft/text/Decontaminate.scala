@@ -38,18 +38,16 @@ object Decontaminate {
     // Gram EQUALITY is all the overlap needs, so grams travel as
     // 64-bit hashes ([[graft.dedup.Dedup.shingleHashes]] — identical
     // tokenization and short-doc collapse as wordShingles, native
-    // codegen kernel when GraftExtensions is present): no per-window
+    // codegen kernel): no per-window
     // string materialization on the corpus scan, and the broadcast
     // eval-gram set is 8 bytes/gram instead of an n-word string.
     // Same 2⁻⁶⁴ collision posture as the MinHash family.
     val evalGrams = eval
-      .select(explode(graft.dedup.Dedup.shingleHashes(
-        eval.sparkSession, col(textCol), n)).as("gram"))
+      .select(explode(graft.dedup.Dedup.shingleHashes(col(textCol), n)).as("gram"))
       .distinct()
     val trainGrams = train
       .select(col(idCol), // shingleHashes already dedups within doc
-        explode(graft.dedup.Dedup.shingleHashes(
-          train.sparkSession, col(textCol), n)).as("gram"))
+        explode(graft.dedup.Dedup.shingleHashes(col(textCol), n)).as("gram"))
     val shared = trainGrams
       .join(broadcast(evalGrams), "gram")
       .groupBy(col(idCol))
@@ -83,14 +81,12 @@ object Decontaminate {
     require(n > 0, s"n-gram size must be positive, got $n")
     // hashed grams, as in [[contaminationReport]] — equality-only use
     val evalGrams = eval
-      .select(explode(graft.dedup.Dedup.shingleHashes(
-        eval.sparkSession, col(textCol), n)).as("gram"))
+      .select(explode(graft.dedup.Dedup.shingleHashes(col(textCol), n)).as("gram"))
       .distinct()
       .withColumn("__hit", lit(1L))
     val trainGrams = train
       .select(col(idCol),
-        explode(graft.dedup.Dedup.shingleHashes(
-          train.sparkSession, col(textCol), n)).as("gram"))
+        explode(graft.dedup.Dedup.shingleHashes(col(textCol), n)).as("gram"))
     val scored = trainGrams
       .join(broadcast(evalGrams), Seq("gram"), "left")
       .groupBy(col(idCol))
@@ -144,14 +140,13 @@ object Decontaminate {
     // probe skips shingle-string materialization, and the verdict is
     // unchanged (gram equality ⇔ hash equality mod 2⁻⁶⁴)
     val grams = eval
-      .select(explode(graft.dedup.Dedup.shingleHashes(
-        spark, col(textCol), n)).as("gram"))
+      .select(explode(graft.dedup.Dedup.shingleHashes(col(textCol), n)).as("gram"))
       .distinct().as[Long].collect().toSet
     val bc = spark.sparkContext.broadcast(grams)
     val hit = udf { shingles: Seq[Long] =>
       shingles != null && shingles.exists(bc.value.contains)
     }
-    hit(graft.dedup.Dedup.shingleHashes(spark, col(textCol), n))
+    hit(graft.dedup.Dedup.shingleHashes(col(textCol), n))
   }
 
   /** Size-routed front door: the exact broadcast-set predicate while
@@ -170,8 +165,7 @@ object Decontaminate {
       maxExactGrams: Long = 10000000L, fpp: Double = 0.001): Column = {
     require(n > 0, s"n-gram size must be positive, got $n")
     val nGrams = eval
-      .select(explode(graft.dedup.Dedup.shingleHashes(
-        eval.sparkSession, col(textCol), n)).as("gram"))
+      .select(explode(graft.dedup.Dedup.shingleHashes(col(textCol), n)).as("gram"))
       .distinct().count()
     if (nGrams <= maxExactGrams) contaminationPredicate(eval, textCol, n)
     else contaminationPredicateBloom(eval, textCol, n,
@@ -193,11 +187,8 @@ object Decontaminate {
       fpp: Double = 0.001): Column = {
     require(n > 0, s"n-gram size must be positive, got $n")
     val spark = eval.sparkSession
-    require(spark.catalog.functionExists("bloom_might_contain"),
-      "contaminationPredicateBloom needs GraftExtensions (bloom_might_contain)")
     val grams = eval
-      .select(explode(graft.dedup.Dedup.shingleHashes(
-        spark, col(textCol), n)).as("__g"))
+      .select(explode(graft.dedup.Dedup.shingleHashes(col(textCol), n)).as("__g"))
     // empty gram set: nothing can contaminate (stat.bloomFilter also
     // NPEs on zero rows — same guard as ScaleJoins.bloomPruned)
     if (grams.isEmpty) return lit(false)
@@ -207,7 +198,7 @@ object Decontaminate {
     // an ~18 MB (at the 10M-gram default) task-binary literal
     val bf = grams.stat.bloomFilter("__g", math.max(expectedGrams, 1L), fpp)
     val handle = spark.sparkContext.broadcast(bf)
-    exists(graft.dedup.Dedup.shingleHashes(spark, col(textCol), n),
+    exists(graft.dedup.Dedup.shingleHashes(col(textCol), n),
       h => graft.plans.BloomMightContainBcast.probe(handle, h))
   }
 }

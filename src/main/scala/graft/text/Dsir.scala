@@ -12,8 +12,10 @@ import org.apache.spark.sql.functions._
   * standard public recipe for "select pretraining data that looks
   * like my high-quality target set".
   *
-  * Feature space: exact gram strings by default (oracle-able — the
-  * verification gate recomputes every weight in SQL), or hashed
+  * Feature space: exact grams by default, carried as 64-bit hashes
+  * (oracle-able — collision-free at any test scale, so the
+  * verification gate recomputes every weight over gram strings in
+  * SQL), or hashed
   * buckets (`nBuckets = Some(m)`, xxhash64 → pmod) for real corpora
   * where the gram vocabulary itself is too large to enumerate: the
   * paper's 10k-bucket form. Same plan either way — only the gram key
@@ -34,28 +36,13 @@ import org.apache.spark.sql.functions._
   */
 object Dsir {
 
-  /** Unigram + bigram feature grams of `textCol` as one array. */
-  private[text] def grams(text: Column): Column = {
-    val tk = TextAnalysis.words(text)
-    // bigrams via an index walk — per-row linear, bounded by doc
-    // length; stays a single projection
-    val bi = when(size(tk) < 2, array().cast("array<string>"))
-      .otherwise(zip_with(
-        slice(tk, lit(1), size(tk) - 1),
-        slice(tk, lit(2), size(tk) - 1),
-        (a, b) => concat(a, lit(" "), b)))
-    concat(tk, bi)
-  }
-
-  /** [[grams]] as 64-bit hashes via the positional NgramHashes kernel
-    * (codegen; no per-window string materialization, no interpreted
-    * zip_with) — DSIR only ever COUNTS gram occurrences, so identity
-    * modulo 2⁻⁶⁴ collisions is all the model needs, and the counts
-    * themselves (hence every weight) are unchanged. Window-count
-    * parity with [[grams]]: ngram_hashes_pos(tk, 1) emits exactly one
-    * hash per token (0 for empty), and the bigram arm keeps grams()'s
-    * empty-below-2-tokens convention (the kernel's short-doc collapse
-    * would emit 1).
+  /** Unigram + bigram feature grams of `textCol` as 64-bit hashes via
+    * the positional NgramHashes kernel (codegen; no per-window string
+    * materialization) — DSIR only ever COUNTS gram occurrences, so
+    * identity modulo 2⁻⁶⁴ collisions is all the model needs.
+    * ngram_hashes_pos(tk, 1) emits exactly one hash per token (0 for
+    * empty); the bigram arm is empty below 2 tokens (the kernel's
+    * short-doc collapse would emit 1).
     */
   private[text] def gramHashes(text: Column): Column = {
     val tk = TextAnalysis.words(text)
@@ -66,11 +53,9 @@ object Dsir {
   }
 
   private def gramKey(nBuckets: Option[Int]): Column = nBuckets match {
-    // pmod of the gram representation (string-hashed or already a
-    // 64-bit gram hash) — bucket FAMILY differs between the two
-    // representations, but bucketing is internal: weights only depend
-    // on bucket-count distributions, spec-pinned equal to exact grams
-    // when collision-free
+    // pmod of the 64-bit gram hash — bucketing is internal: weights
+    // only depend on bucket-count distributions, spec-pinned equal to
+    // exact grams when collision-free
     case Some(m) => pmod(xxhash64(col("gram")), lit(m.toLong)).cast("string")
     case None    => col("gram")
   }
@@ -83,13 +68,10 @@ object Dsir {
   def importanceWeights(raw: DataFrame, target: DataFrame,
       idCol: String, textCol: String,
       nBuckets: Option[Int] = None, smoothing: Double = 1.0): DataFrame = {
-    val gramCol: Column => Column =
-      if (graft.plans.GraftExtensions.available(raw.sparkSession)) gramHashes
-      else grams(_)
     val rawGrams = raw.select(col(idCol),
-      explode(gramCol(col(textCol))).as("gram"))
+      explode(gramHashes(col(textCol))).as("gram"))
       .select(col(idCol), gramKey(nBuckets).as("g"))
-    val tgtGrams = target.select(explode(gramCol(col(textCol))).as("gram"))
+    val tgtGrams = target.select(explode(gramHashes(col(textCol))).as("gram"))
       .select(gramKey(nBuckets).as("g"))
 
     // ONE corpus explode pass: the per-(doc, gram) counts are computed

@@ -26,19 +26,15 @@ object SpanDedup {
     * every length-`n` window joined by single spaces; docs shorter
     * than `n` tokens collapse to one whole-doc gram (the NgramHashes
     * convention, and DuckDB's truncating list-slice semantics, so the
-    * SQL oracle derives the identical set).
+    * SQL oracle derives the identical set). The string reference form
+    * of the gram hashes both operators below run on.
     */
-  def wordGrams(textCol: Column, n: Int): Column =
-    wordGramsFromTokens(split(trim(textCol), "\\s+"), n)
-
-  /** [[wordGrams]] over an already-split token array (so callers that
-    * need BOTH tokens and grams split once). Gram at array position i
-    * (1-based) covers tokens [i, i+n-1], truncated at the doc end.
-    */
-  def wordGramsFromTokens(tk: Column, n: Int): Column =
+  def wordGrams(textCol: Column, n: Int): Column = {
+    val tk = split(trim(textCol), "\\s+")
     transform(
       sequence(lit(1), greatest(size(tk) - lit(n - 1), lit(1))),
       i => concat_ws(" ", slice(tk, i, lit(n))))
+  }
 
   /** Per-document report: (idCol, n_grams, n_dup_grams, dup_frac).
     * `n_grams` counts DISTINCT grams in the doc; a gram is duplicated
@@ -48,24 +44,15 @@ object SpanDedup {
   def dupSpanReport(docs: DataFrame, idCol: String, textCol: String,
       n: Int): DataFrame = {
     // Gram IDENTITY is all this needs (equality for the doc-frequency
-    // count), so with GraftExtensions the grams are 64-bit
-    // [[graft.plans.NgramHashes]] hashes, never strings: the per-doc
-    // distinct happens inside the codegen kernel (the corpus-wide
-    // (doc, gram) distinct exchange disappears — it only ever deduped
-    // within-doc repeats) and both remaining keyed exchanges carry
+    // count), so the grams are 64-bit [[graft.plans.NgramHashes]]
+    // hashes of the [[wordGrams]] windows, never strings: the per-doc
+    // distinct happens inside the codegen kernel (no corpus-wide
+    // (doc, gram) distinct exchange) and both keyed exchanges carry
     // 8-byte longs instead of n-word strings. Same 2⁻⁶⁴ collision
-    // posture as the MinHash shingle family. Fallback: the composed
-    // string form.
-    val spark = docs.sparkSession
-    val dg =
-      if (graft.plans.GraftExtensions.available(spark))
-        docs.filter(trim(col(textCol)) =!= "")
-          .select(col(idCol), explode(call_function("ngram_hashes",
-            split(trim(col(textCol)), "\\s+"), lit(n))).as("__g"))
-      else docs
-        .filter(trim(col(textCol)) =!= "")
-        .select(col(idCol), explode(wordGrams(col(textCol), n)).as("__g"))
-        .distinct()
+    // posture as the MinHash shingle family.
+    val dg = docs.filter(trim(col(textCol)) =!= "")
+      .select(col(idCol), explode(call_function("ngram_hashes",
+        split(trim(col(textCol)), "\\s+"), lit(n))).as("__g"))
     // doc-frequency per gram: dg is already distinct per (doc, gram),
     // so count(*) IS the distinct-doc count — no countDistinct state
     val dfreq = dg.groupBy(col("__g")).agg(count(lit(1)).as("__df"))
@@ -119,17 +106,16 @@ object SpanDedup {
         split(trim(col(textCol)), "\\s+").as("__tk"))
       .withColumn("__ntk", size(col("__tk")))
       .localCheckpoint(true)
-    // positional gram HASHES when the native kernel is available
-    // (occurrence identity only needs equality): no per-window string
-    // materialization, and the gram-keyed exchange under gstats carries
-    // longs — the dupSpanReport rationale at the occurrence level
-    val gramsCol =
-      if (graft.plans.GraftExtensions.available(docs.sparkSession))
-        call_function("ngram_hashes_pos", col("__tk"), lit(n))
-      else wordGramsFromTokens(col("__tk"), n)
+    // positional gram HASHES (occurrence identity only needs
+    // equality): no per-window string materialization, and the
+    // gram-keyed exchange under gstats carries longs — the
+    // dupSpanReport rationale at the occurrence level. Gram at array
+    // position i (1-based) covers tokens [i, i+n-1], truncated at the
+    // doc end.
     val occ = base
       .select(col("__id"), col("__ntk"),
-        posexplode(gramsCol).as(Seq("__p0", "__g")))
+        posexplode(call_function("ngram_hashes_pos", col("__tk"), lit(n)))
+          .as(Seq("__p0", "__g")))
       .withColumn("__pos", col("__p0") + 1)
       // canonical occurrence = lexicographic min of (id, pos) — a
       // STRUCT, not a packed long: id * 10^6 + pos overflows for ids

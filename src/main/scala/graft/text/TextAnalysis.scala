@@ -71,24 +71,18 @@ object TextAnalysis {
     "the", "a", "an", "and", "or", "of", "to", "in", "is", "are", "was",
     "it", "that", "this", "for", "on", "with", "as", "at", "by")
 
-  /** Count of `toks` elements that are members of `words`, preferring
-    * the codegen path (per-token 64-bit hashes via `ngram_hashes_pos`
-    * + [[graft.plans.InSetCount]] binary search over the pre-hashed
-    * probe set) over the interpreted `filter(toks, OR-chain)` lambda —
-    * the HOF path executes the chain per element OUTSIDE codegen,
-    * which dominated the langid/quality scans at scale. Token equality
-    * becomes hash equality (the MinHash family's 2⁻⁶⁴ posture).
+  /** Count of `toks` elements that are members of `words`, in
+    * codegen: per-token 64-bit hashes via `ngram_hashes_pos` +
+    * [[graft.plans.InSetCount]] binary search over the pre-hashed
+    * probe set, instead of an interpreted per-element OR-chain lambda
+    * (which dominated the langid/quality scans at scale). Token
+    * equality becomes hash equality (the MinHash family's 2⁻⁶⁴
+    * posture).
     */
   private def memberCount(toks: Column, words: Seq[String]): Column =
-    if (org.apache.spark.sql.SparkSession.getActiveSession
-        .exists(graft.plans.GraftExtensions.available)) {
-      val probes = words.map(w =>
-        lit(graft.plans.NgramHashes.tokenGramHash(w)))
-      call_function("in_set_count",
-        call_function("ngram_hashes_pos", toks, lit(1)),
-        array(probes: _*))
-    } else size(filter(toks,
-      t => words.foldLeft(lit(false))((acc, w) => acc || t === w)))
+    call_function("in_set_count",
+      call_function("ngram_hashes_pos", toks, lit(1)),
+      array(words.map(w => lit(graft.plans.NgramHashes.tokenGramHash(w))): _*))
 
   def stopwordRatio(text: Column, stopwords: Seq[String] = EnglishStopwords): Column = {
     val toks = split(lower(trim(text)), "\\s+")

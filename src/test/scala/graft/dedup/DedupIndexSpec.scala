@@ -79,7 +79,7 @@ class DedupIndexSpec extends SparkSpec {
     val batch2 = Seq(doc(2, base + " with one extra tail")).toDF("doc_id", "text")
     import graft.text.TextAnalysis
     wh.append("dix__shingles", batch2.select(col("doc_id").as("id"),
-      Dedup.shingleHashes(spark, col("text"), 5).as("shingles")))
+      Dedup.shingleHashes(col("text"), 5).as("shingles")))
     assert(wh.read("dix__bands").filter(col("id") === 2L).count() === 0)
     // replaying the batch repairs it: bands land, shingles NOT duplicated
     val pairsDf = DedupIndex.update(wh, "dix", batch2, "doc_id", "text",

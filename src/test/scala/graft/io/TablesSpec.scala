@@ -76,22 +76,36 @@ class TablesSpec extends SparkSpec {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("metalru").toString
     val path = s"$dir/t.parquet"
-    val saved = Tables.MetaCacheMaxEntries
-    try {
-      Tables.MetaCacheMaxEntries = 4
-      // every rewrite changes (mtime, length) ⇒ a fresh cache key; the
-      // LRU bound must hold however many stale keys churn through
-      (0 until 10).foreach { i =>
-        Seq.fill(i + 1)((i.toLong, s"v$i")).toDF("id", "s")
-          .repartition(1).write.mode("overwrite").parquet(path)
-        val back = Tables.readParquet(spark, path)
-        assert(back.count() === i + 1)
-      }
-      assert(Tables.metaCacheSize <= 4,
-        s"metaCache grew past its bound: ${Tables.metaCacheSize}")
-      // eviction is metadata-only: re-reading an unchanged file after
-      // churn still returns the correct schema (worst case a re-probe)
-      assert(Tables.readParquet(spark, path).columns.toSet === Set("id", "s"))
-    } finally Tables.MetaCacheMaxEntries = saved
+    // a cache of its own with a small bound: the session-wide cache is
+    // shared with every other suite, so its size proves nothing here
+    val cache = new Tables.MetaCache(4)
+    // every rewrite changes (mtime, length) ⇒ a fresh cache key; the
+    // LRU bound must hold however many stale keys churn through
+    (0 until 10).foreach { i =>
+      Seq.fill(i + 1)((i.toLong, s"v$i")).toDF("id", "s")
+        .repartition(1).write.mode("overwrite").parquet(path)
+      val back = Tables.readParquet(spark, path, cache)
+      assert(back.count() === i + 1)
+    }
+    assert(cache.size <= 4, s"metaCache grew past its bound: ${cache.size}")
+    // eviction is metadata-only: re-reading an unchanged file after
+    // churn still returns the correct schema (worst case a re-probe)
+    assert(Tables.readParquet(spark, path, cache).columns.toSet === Set("id", "s"))
+  }
+
+  test("parquet metadata cache infers outside its lock") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val cache = new Tables.MetaCache(4)
+    val meta = (new org.apache.spark.sql.types.StructType(), Seq.empty[String])
+    // a load that waits on another thread's load of a different key:
+    // completes only if the first load does not hold the cache's lock
+    val outer = cache.getOrLoad("a") {
+      Await.result(Future(cache.getOrLoad("b")(meta)), 30.seconds)
+    }
+    assert(outer === meta)
+    assert(cache.size === 2)
+    assert(cache.getOrLoad("a")(sys.error("hit must not reload")) === meta)
   }
 }

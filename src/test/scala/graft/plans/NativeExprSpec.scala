@@ -19,7 +19,7 @@ class NativeExprSpec extends SparkSpec {
   test("simhash64 native == composed for identical token hashes") {
     val df = texts.toDF("t")
     val both = df.select(
-      Dedup.simHashColumn(spark, $"t").as("native"),
+      Dedup.simHashColumn($"t").as("native"),
       Dedup.simHash($"t").as("composed"))
       .as[(Long, Long)].collect()
     both.foreach { case (n, c) => assert(n === c) }
@@ -28,7 +28,7 @@ class NativeExprSpec extends SparkSpec {
   test("ngram_hashes cardinality == string-shingle cardinality") {
     val df = texts.toDF("t")
     val sizes = df.select(
-      size(Dedup.shingleHashes(spark, $"t", 3)).as("native_n"),
+      size(Dedup.shingleHashes($"t", 3)).as("native_n"),
       size(TextAnalysis.wordShingles($"t", 3)).as("string_n"))
       .as[(Int, Int)].collect()
     sizes.foreach { case (n, s) => assert(n === s) }
@@ -106,7 +106,7 @@ class NativeExprSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("ne").toString
     texts.toDF("t").write.parquet(s"$dir/t")
     val df = spark.read.parquet(s"$dir/t")
-      .select(Dedup.simHashColumn(spark, $"t").as("s"))
+      .select(Dedup.simHashColumn($"t").as("s"))
     val plan = graft.ops.EngineOps.explain(df, "codegen")
     assert(plan.contains("Found 1 WholeStageCodegen subtree"), plan.take(400))
   }
@@ -122,8 +122,8 @@ class NativeExprSpec extends SparkSpec {
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try {
       val df = spark.read.parquet(s"$dir/t")
-        .select(Dedup.simHashColumn(spark, $"t").as("sig"),
-          Dedup.shingleHashes(spark, $"t", 3).as("grams"),
+        .select(Dedup.simHashColumn($"t").as("sig"),
+          Dedup.shingleHashes($"t", 3).as("grams"),
           call_function("ngram_hashes_pos",
             split(trim($"t"), "\\s+"), lit(3)).as("posgrams"))
       assert(df.collect().length === texts.length)

@@ -60,7 +60,7 @@ class VecCosineSpec extends SparkSpec {
     val df = Seq("the quick brown fox jumps over the lazy dog",
       "a b c", "x").toDF("t")
     val arrs = df.select(
-        graft.dedup.Dedup.shingleHashes(spark, $"t", 3).as("sh"))
+        graft.dedup.Dedup.shingleHashes($"t", 3).as("sh"))
       .as[Seq[Long]].collect()
     arrs.foreach(a => assert(a === a.sorted, s"unsorted: $a"))
   }
