@@ -15,6 +15,11 @@ final case class OverlapReport(
     maxTime: Option[java.sql.Timestamp],
     affectedEntities: Seq[String])
 
+object OverlapReport {
+  /** The report of a batch that overlaps nothing. */
+  val NoOverlap: OverlapReport = OverlapReport(false, 0, None, None, Nil)
+}
+
 /** Load statistics mirroring `data_loader.py:938-979`. */
 final case class LoadStats(
     table: String,
@@ -39,44 +44,15 @@ final case class LoadStats(
   *
   * Scale: when the natural key includes the time column and the table
   * is date-partitioned ([[Warehouse.createTable]] `partitionSource`),
-  * the existing side is filtered to the incoming batch's exact
-  * `[min,max]` time bounds — lossless for key equality — AND to the
-  * matching `p_date` directories, so a re-ingest scans only the
-  * overlapping date partitions, never the full table. That is the
+  * the existing side is read through [[Warehouse.readTimeRange]] at
+  * the incoming batch's exact `[min,max]` time bounds — lossless for
+  * key equality — which prunes to the matching date directories, so
+  * a re-ingest scans only the overlapping date partitions, never the
+  * full table. That is the
   * reference's idempotent-re-ingest guarantee (`data_loader.py:
   * 173-177`) kept cheap at 100 TB.
   */
 final class Loader(spark: SparkSession, warehouse: Warehouse) {
-
-  /** The existing side of a merge, pruned to `[lo-widen, hi+widen]` on
-    * `timeCol` — with the matching derived-date partition filter when
-    * the table is date-partitioned, so the time bound becomes directory
-    * pruning rather than a post-scan filter. Derived column is dropped
-    * after filtering.
-    */
-  private[graft] def timeFilteredExisting(
-      table: String,
-      timeCol: String,
-      lo: java.sql.Timestamp,
-      hi: java.sql.Timestamp,
-      widenHours: Int = 0): DataFrame = {
-    val widened = expr(s"INTERVAL $widenHours HOURS")
-    val raw = warehouse.readRaw(table)
-    val timeBound = col(timeCol) >= lit(lo) - widened &&
-      col(timeCol) <= lit(hi) + widened
-    val derived = warehouse.readMeta(table).flatMap(_.partitionSource)
-    val filtered =
-      if (derived.contains(timeCol) &&
-        raw.columns.contains(Warehouse.DerivedDateCol))
-        raw.filter(
-          col(Warehouse.DerivedDateCol) >= to_date(lit(lo) - widened) &&
-            col(Warehouse.DerivedDateCol) <= to_date(lit(hi) + widened) &&
-            timeBound)
-      else raw.filter(timeBound)
-    if (filtered.columns.contains(Warehouse.DerivedDateCol))
-      filtered.drop(Warehouse.DerivedDateCol)
-    else filtered
-  }
 
   /** min/max of `timeCol` over a batch; None when all-null/empty. */
   private def timeBounds(df: DataFrame, timeCol: String)
@@ -100,12 +76,12 @@ final class Loader(spark: SparkSession, warehouse: Warehouse) {
       timeCol: String,
       entityCol: String,
       widenHours: Int = 1): OverlapReport = {
-    if (!warehouse.tableExists(table)) return OverlapReport(false, 0, None, None, Nil)
-    if (warehouse.read(table).isEmpty) return OverlapReport(false, 0, None, None, Nil)
+    if (!warehouse.tableExists(table)) return OverlapReport.NoOverlap
+    if (warehouse.read(table).isEmpty) return OverlapReport.NoOverlap
 
     val (lo, hi) = timeBounds(incoming, timeCol) match {
       case Some(b) => b
-      case None => return OverlapReport(false, 0, None, None, Nil)
+      case None => return OverlapReport.NoOverlap
     }
     val entities = incoming.select(entityCol).distinct()
 
@@ -113,7 +89,7 @@ final class Loader(spark: SparkSession, warehouse: Warehouse) {
     // array literal) → broadcast semi-join; the time filter prunes the
     // warehouse scan (directory-level on date-partitioned tables)
     // BEFORE the join.
-    val overlapping = timeFilteredExisting(table, timeCol, lo, hi, widenHours)
+    val overlapping = warehouse.readTimeRange(table, timeCol, lo, hi, widenHours)
       .join(broadcast(entities), Seq(entityCol), "left_semi")
 
     val stats = overlapping.agg(
@@ -163,7 +139,7 @@ final class Loader(spark: SparkSession, warehouse: Warehouse) {
           .flatMap(tc => timeBounds(incoming, tc).map((tc, _)))
         prunable match {
           case Some((tc, (lo, hi))) =>
-            val existing = timeFilteredExisting(table, tc, lo, hi)
+            val existing = warehouse.readTimeRange(table, tc, lo, hi)
             deduped.join(existing.select(keys.map(col): _*), keys, "left_anti")
           case None =>
             // no time bound to prune by → bloom-prune the warehouse scan

@@ -219,7 +219,7 @@ final class Orchestrator(spark: SparkSession, config: EngineConfig) {
       if (hasTime)
         loader.load(df, table, keys, config.timeColumn, entityCol,
           skipOnOverlap, onAppended = refreshViews(table))
-      else (OverlapReport(hasOverlap = false, 0, None, None, Nil),
+      else (OverlapReport.NoOverlap,
         Some(loader.dedupAppend(df, table, keys,
           onAppended = refreshViews(table))))
     LoadResult(table, ddl, report, stats)

@@ -108,12 +108,19 @@ object MatView {
     */
   def refresh(wh: Warehouse, mv: MatViewDef, delta: DataFrame): Unit = {
     val p = partial(delta, mv)
+    writeState(wh, mv, p)(mergeStates(_, p, mv))
+  }
+
+  /** Store the view state: `first` creates it, else `next(state)`
+    * replaces it crash-safely.
+    */
+  private def writeState(wh: Warehouse, mv: MatViewDef, first: => DataFrame)(
+      next: DataFrame => DataFrame): Unit =
     if (!wh.tableExists(mv.stateTable)) {
+      val p = first
       wh.createTable(mv.stateTable, p.schema)
       wh.append(mv.stateTable, p)
-    } else
-      wh.replaceTable(mv.stateTable, mergeStates(wh.read(mv.stateTable), p, mv))
-  }
+    } else wh.replaceTable(mv.stateTable, next(wh.read(mv.stateTable)))
 
   /** The finalized view from durable state. */
   def readView(wh: Warehouse, mv: MatViewDef): DataFrame =
@@ -167,15 +174,9 @@ object MatView {
     * POST-mutation base table (only read on the non-invertible path).
     */
   def refreshMutation(wh: Warehouse, mv: MatViewDef, removed: DataFrame,
-      added: DataFrame, baseAfter: => DataFrame): Unit = {
-    if (!wh.tableExists(mv.stateTable)) {
-      val p = partial(added, mv)
-      wh.createTable(mv.stateTable, p.schema)
-      wh.append(mv.stateTable, p)
-    } else
-      wh.replaceTable(mv.stateTable,
-        mutateState(wh.read(mv.stateTable), removed, added, baseAfter, mv))
-  }
+      added: DataFrame, baseAfter: => DataFrame): Unit =
+    writeState(wh, mv, partial(added, mv))(
+      mutateState(_, removed, added, baseAfter, mv))
 
   /** Fold a [[SnapshotDiff.changes]] feed (table keys + after-payload
     * + change tag) into the state. The feed carries only the AFTER
@@ -281,10 +282,7 @@ object MatView {
     */
   def rebuild(wh: Warehouse, mv: MatViewDef, base: DataFrame): Unit = {
     val p = partial(base, mv)
-    if (!wh.tableExists(mv.stateTable)) {
-      wh.createTable(mv.stateTable, p.schema)
-      wh.append(mv.stateTable, p)
-    } else wh.replaceTable(mv.stateTable, p)
+    writeState(wh, mv, p)(_ => p)
   }
 
   /** CUBE variant of [[partial]]: one state row per (grouping set ×

@@ -1,7 +1,9 @@
 package graft.store
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row,
+  SaveMode, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
 /** Warehouse layer — the engine-management surface of the reference's
@@ -184,8 +186,11 @@ final class Warehouse(spark: SparkSession, val location: String) {
     * written under `p_date=YYYY-MM-DD/` directories derived from the
     * column; readers never see the derived column ([[read]] drops it),
     * but any scan filtered on it prunes whole date directories — the
-    * property [[graft.load.Loader.dedupAppend]] relies on to avoid
-    * full-table key scans on re-ingest.
+    * property [[readTimeRange]] relies on to avoid full-table key
+    * scans on re-ingest.
+    *
+    * Every layout starts as an empty directory: until the first write
+    * the schema sidecar is the table's schema ([[readRaw]]).
     */
   def createTable(table: String, schema: StructType,
       ifExists: String = "fail",
@@ -199,21 +204,12 @@ final class Warehouse(spark: SparkSession, val location: String) {
       case "replace" => dropTable(table)
       case other => sys.error(s"Invalid if_exists mode: $other")
     }
-    val parts =
-      if (partitionSource.isDefined) Seq(Warehouse.DerivedDateCol)
-      else partitionBy
-    if (parts.nonEmpty) {
-      // A zero-row partitioned write emits no data files at all, which
-      // would leave nothing to infer a schema from — the schema sidecar
-      // (written below) is the source of truth; just create the dir.
-      fs.mkdirs(new Path(path(table)))
-    } else {
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        .write.mode(SaveMode.Overwrite).parquet(path(table))
-    }
+    fs.mkdirs(new Path(path(table)))
     writeSchema(table, schema)
-    writeMeta(table, parts, uniqueKeys, partitionSource)
+    writeMeta(table,
+      if (partitionSource.isDefined) Seq(Warehouse.DerivedDateCol)
+      else partitionBy,
+      uniqueKeys, partitionSource)
   }
 
   /** Add the derived date-partition column when the table declares one.
@@ -228,14 +224,32 @@ final class Warehouse(spark: SparkSession, val location: String) {
     src match {
       case Some(c) if df.columns.contains(c) =>
         df.withColumn(Warehouse.DerivedDateCol,
-          org.apache.spark.sql.functions.to_date(
-            org.apache.spark.sql.functions.col(c)))
+          org.apache.spark.sql.functions.to_date(col(c)))
       case Some(c) if !df.columns.contains(Warehouse.DerivedDateCol) =>
         sys.error(s"table declares partitionSource '$c' but the frame " +
           s"has neither '$c' nor '${Warehouse.DerivedDateCol}'; " +
           "cannot derive the partition layout")
       case _ => df
     }
+
+  /** A writer of `df` in `table`'s recorded layout — the derived date
+    * column added and the table's partitioning re-applied (`partitionBy`
+    * only when the meta records none). Every write goes through here,
+    * so none can flatten a partitioned table while its meta still
+    * claims the layout: the next append would interleave partitioned
+    * and flat files, and partition discovery would see only one kind.
+    */
+  private def laidOut(table: String, df: DataFrame, mode: SaveMode,
+      partitionBy: Seq[String] = Nil): DataFrameWriter[Row] = {
+    val meta = readMeta(table)
+    val src = meta.flatMap(_.partitionSource)
+    val parts =
+      if (src.isDefined) Seq(Warehouse.DerivedDateCol)
+      else if (partitionBy.nonEmpty) partitionBy
+      else meta.map(_.partitionBy).getOrElse(Nil)
+    val w = withDerived(df, src).write.mode(mode)
+    if (parts.nonEmpty) w.partitionBy(parts: _*) else w
+  }
 
   def dropTable(table: String): Unit = withTableLease(table, "dropTable") {
     val p = new Path(path(table))
@@ -250,17 +264,17 @@ final class Warehouse(spark: SparkSession, val location: String) {
     * internal layout detail and is dropped.
     */
   def read(table: String): DataFrame = {
-    val raw = readRaw(table)
-    if (readMeta(table).exists(_.partitionSource.isDefined) &&
-      raw.columns.contains(Warehouse.DerivedDateCol))
+    val meta = readMeta(table)
+    val raw = scan(table, meta)
+    if (meta.exists(_.partitionSource.isDefined))
       raw.drop(Warehouse.DerivedDateCol)
     else raw
   }
 
   /** Physical read, derived partition column included — for callers
-    * that filter on it to prune date directories (Loader). A table with
-    * no data files yet (freshly created partitioned layout) reads as an
-    * empty frame with the persisted schema.
+    * that filter on it to prune partition directories. A table with
+    * no data files yet (freshly created, any layout) reads as an
+    * empty frame with the persisted schema and partition columns.
     *
     * When a schema sidecar exists it is applied to the scan: files
     * written before a schema evolution ([[appendEvolved]]) lack the
@@ -270,16 +284,12 @@ final class Warehouse(spark: SparkSession, val location: String) {
     * to the read schema for partitioned layouts (it lives in directory
     * names, not the logical schema).
     */
-  def readRaw(table: String): DataFrame =
-    if (dataFiles(table).isEmpty)
-      readSchema(table) match {
-        case Some(schema) => spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        case None => spark.read.parquet(path(table))
-      }
-    else readSchema(table) match {
+  def readRaw(table: String): DataFrame = scan(table, readMeta(table))
+
+  private def scan(table: String, meta: Option[TableMeta]): DataFrame =
+    readSchema(table) match {
       case Some(schema) =>
-        val parts = readMeta(table).map(_.partitionBy).getOrElse(Nil)
+        val parts = meta.map(_.partitionBy).getOrElse(Nil)
         val full = parts.foldLeft(schema) { (sc, p) =>
           if (sc.fieldNames.contains(p)) sc
           else sc.add(org.apache.spark.sql.types.StructField(p,
@@ -287,9 +297,37 @@ final class Warehouse(spark: SparkSession, val location: String) {
               org.apache.spark.sql.types.DateType
             else org.apache.spark.sql.types.StringType))
         }
-        spark.read.schema(full).parquet(path(table))
+        if (dataFiles(table).isEmpty)
+          spark.createDataFrame(spark.sparkContext.emptyRDD[Row], full)
+        else spark.read.schema(full).parquet(path(table))
       case None => spark.read.parquet(path(table))
     }
+
+  /** Rows of `table` whose `timeCol` lies in `[lo, hi]` widened by
+    * `widenHours` on each side, logical columns only. On a table
+    * date-partitioned by `timeCol` the bound also filters the derived
+    * date column, so it becomes directory pruning rather than a
+    * post-scan filter — a re-ingest's overlap check and key anti-join
+    * read the batch's days, never the full table.
+    */
+  private[graft] def readTimeRange(table: String, timeCol: String,
+      lo: java.sql.Timestamp, hi: java.sql.Timestamp,
+      widenHours: Int = 0): DataFrame = {
+    import org.apache.spark.sql.functions.{expr, lit, to_date}
+    val meta = readMeta(table)
+    val raw = scan(table, meta)
+    val widened = expr(s"INTERVAL $widenHours HOURS")
+    val from = lit(lo) - widened
+    val to = lit(hi) + widened
+    val inTime = col(timeCol) >= from && col(timeCol) <= to
+    val date = col(Warehouse.DerivedDateCol)
+    val pruned =
+      if (meta.flatMap(_.partitionSource).contains(timeCol) &&
+        raw.columns.contains(Warehouse.DerivedDateCol))
+        raw.filter(date >= to_date(from) && date <= to_date(to) && inTime)
+      else raw.filter(inTime)
+    pruned.drop(Warehouse.DerivedDateCol)
+  }
 
   /** Append with ADDITIVE schema evolution: new columns widen the
     * table (schema sidecar updated; older files surface them as nulls
@@ -300,7 +338,7 @@ final class Warehouse(spark: SparkSession, val location: String) {
     * point at 100 TB.
     */
   def appendEvolved(table: String, df: DataFrame): Unit = {
-    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.functions.lit
     val current = readSchema(table).getOrElse(read(table).schema)
     val (onlyOld, onlyNew, retyped) = compareSchemas(current, df.schema)
     require(retyped.isEmpty,
@@ -315,32 +353,17 @@ final class Warehouse(spark: SparkSession, val location: String) {
 
   def append(table: String, df: DataFrame): Unit =
       withTableLease(table, "append") {
-    val meta = readMeta(table)
-    val parts = meta.map(_.partitionBy).getOrElse(Nil)
-    val out = withDerived(df, meta.flatMap(_.partitionSource))
-    val w = out.write.mode(SaveMode.Append)
-    (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).parquet(path(table))
+    laidOut(table, df, SaveMode.Append).parquet(path(table))
   }
 
-  /** Overwrite keeps an existing table's recorded layout: a derived
-    * date partitioning (or recorded partition columns) is re-applied —
-    * otherwise one overwrite would silently flatten the layout while
-    * the meta still claims it, and the next append would interleave
-    * partitioned and unpartitioned files.
+  /** Overwrite in place, keeping an existing table's recorded layout
+    * ([[laidOut]]); `partitionBy` lays out a table whose meta records
+    * no partitioning.
     */
   def overwrite(table: String, df: DataFrame,
       partitionBy: Seq[String] = Nil): Unit =
       withTableLease(table, "overwrite") {
-    val meta = readMeta(table)
-    val src = meta.flatMap(_.partitionSource)
-    val out = withDerived(df, src)
-    val parts =
-      if (src.isDefined) Seq(Warehouse.DerivedDateCol)
-      else if (partitionBy.nonEmpty) partitionBy
-      else meta.map(_.partitionBy).getOrElse(Nil)
-    val w = out.write.mode(SaveMode.Overwrite)
-    (if (parts.nonEmpty) w.partitionBy(parts: _*) else w)
-      .parquet(path(table))
+    laidOut(table, df, SaveMode.Overwrite, partitionBy).parquet(path(table))
   }
 
   /** Schema diff — `compare_table_schemas` (`postgres_manager.py:
@@ -398,24 +421,16 @@ final class Warehouse(spark: SparkSession, val location: String) {
       withTableLease(table, "compact") {
     if (dataFiles(table).isEmpty) return // nothing to rewrite
     val parts = readMeta(table).map(_.partitionBy).getOrElse(Nil)
-    val tmp = new Path(path(table) + "__compact")
     // Partitioned layout: shuffle BY the partition columns so each
     // task holds whole partitions and every partition directory
     // compacts to one file. A plain repartition(n) would scatter each
     // partition's rows across all n tasks — n small files per
     // directory, the opposite of compaction.
     val raw = readRaw(table)
-    val df =
+    replaceTable(table,
       if (parts.nonEmpty)
-        raw.repartition(math.max(targetFiles, 1),
-          parts.map(org.apache.spark.sql.functions.col): _*)
-      else raw.repartition(targetFiles)
-    val w = df.write.mode(SaveMode.Overwrite)
-    (if (parts.nonEmpty) w.partitionBy(parts: _*) else w)
-      .parquet(tmp.toString)
-    // crash-safe: [[swapTableDir]] — listTables hides the transient
-    // `__compact`/`__old` names at every instant of the dance
-    swapTableDir(table, tmp, "compact")
+        raw.repartition(math.max(targetFiles, 1), parts.map(col): _*)
+      else raw.repartition(targetFiles))
   }
 
   /** Selective compaction: rewrite ONLY the partition directories
@@ -423,29 +438,102 @@ final class Warehouse(spark: SparkSession, val location: String) {
     * `col("p_date") === "2024-01-01"`), leaving every other partition's
     * files untouched. At 100 TB a full-table [[compact]] is a
     * 100 TB rewrite; real maintenance compacts the handful of hot
-    * partitions the last ingest fragmented. The slice is read
-    * partition-pruned (the predicate reaches the scan as directory
-    * pruning), rewritten to a working dir, then swapped per partition
-    * with the same crash-safe rename dance as [[compact]].
+    * partitions the last ingest fragmented ([[rewritePartitions]]).
     */
-  def compactPartitions(table: String, predicate: org.apache.spark.sql.Column,
+  def compactPartitions(table: String, predicate: Column,
       targetFilesPerPartition: Int = 1): Unit =
       withTableLease(table, "compactPartitions") {
     val parts = readMeta(table).map(_.partitionBy).getOrElse(Nil)
     require(parts.nonEmpty, s"compactPartitions: table $table is not partitioned")
-    val slice = readRaw(table).filter(predicate)
-    val tmp = new Path(path(table) + "__compact")
-    slice.repartition(math.max(targetFilesPerPartition, 1),
-        parts.map(org.apache.spark.sql.functions.col): _*)
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy(parts: _*).parquet(tmp.toString)
+    rewritePartitions(table, readRaw(table), parts, Left(predicate),
+      tasks = math.max(targetFilesPerPartition, 1))(identity)
+  }
+
+  /** Write `df` in `table`'s recorded layout ([[laidOut]]) to the
+    * table's working dir and return that dir. Every transient dir of
+    * the table is removed first: under the writer lease each one is
+    * debris of a crashed stage or swap, and stale staged files must
+    * not ride the next swap into the live table.
+    */
+  private def stage(table: String, df: DataFrame): Path = {
+    Warehouse.TransientSuffixes.foreach(s =>
+      fs.delete(new Path(path(table) + s), true))
+    val tmp = new Path(path(table) + Warehouse.Stage)
+    laidOut(table, df, SaveMode.Overwrite).parquet(tmp.toString)
+    tmp
+  }
+
+  /** The partition-slice stage-and-swap behind [[merge]],
+    * [[deleteWhere]] and [[compactPartitions]]. `slice` names the
+    * partitions to rewrite: the caller's predicate on partition
+    * columns, or partition tuples matched null-safely (`<=>`, so a
+    * NULL partition value — rows whose partition source was null —
+    * matches its own tuple). Either way it reaches the scan as
+    * directory pruning. `f(slice)` is shuffled by the partition
+    * columns (each task holds whole partitions, so each directory gets
+    * one file; `tasks` fixes the task count), staged, and swapped in
+    * per partition directory; every other partition keeps its files.
+    * A listed tuple whose partition `f` leaves empty has no staged
+    * directory, so the swap would leave its old files live: it is
+    * removed after the swap.
+    */
+  private def rewritePartitions(table: String, raw: DataFrame,
+      parts: Seq[String], slice: Either[Column, Seq[Row]], tasks: Int = 0)(
+      f: DataFrame => DataFrame): Unit = {
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+    import org.apache.spark.sql.functions.lit
+    val cols = parts.map(col)
+    val tuples = slice.getOrElse(Nil)
+    val pred = slice.fold(identity, _.map { t =>
+      cols.indices.map(i => cols(i) <=> lit(t.get(i))).reduce(_ && _)
+    }.reduce(_ || _))
+    val out = f(raw.filter(pred))
+    val tmp = stage(table,
+      if (tasks > 0) out.repartition(tasks, cols: _*)
+      else out.repartition(cols: _*))
+    // Dir names must use Spark's OWN rendering — escapePathName for
+    // special chars (space, '=', '%', …), __HIVE_DEFAULT_PARTITION__
+    // for NULL — or an emptied partition with such a value would
+    // silently keep its old files live under a name this code never
+    // computes. Values render through Catalyst's Cast-to-string with
+    // the session timezone, exactly as the partition writer does:
+    // external toString diverges for some types (e.g.
+    // java.sql.Timestamp appends '.0') and would misclassify every
+    // partition of such a column as emptied.
+    val partTypes = parts.map(p => raw.schema(p).dataType)
+    def relOf(t: Row): String =
+      parts.indices.map { i =>
+        val rendered = Option(t.get(i)).map { v =>
+          Cast(Literal.create(v, partTypes(i)),
+            org.apache.spark.sql.types.StringType,
+            Option(spark.sessionState.conf.sessionLocalTimeZone))
+            .eval(null).toString
+        }.orNull
+        org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+          .getPartitionPathString(parts(i), rendered)
+      }.mkString("/")
+    // found BEFORE the swap, which consumes tmp
+    val emptied = tuples.map(relOf)
+      .filterNot(rel => fs.exists(new Path(s"$tmp/$rel")))
+    // every emptied partition must resolve to a live dir before the
+    // swap: if the rendering ever disagrees with what the writer
+    // produced, fail loudly instead of deleting a nonexistent path
+    // while the rows the rewrite dropped stay readable (the
+    // deleteWhere erase contract)
+    emptied.foreach { rel =>
+      if (!fs.exists(new Path(s"${path(table)}/$rel"))) sys.error(
+        s"$table: partition dir $rel found neither under the staged " +
+          "write nor the live table — refusing to report rows removed " +
+          "that would stay readable")
+    }
     swapPartitionDirs(table, tmp, parts.size)
+    emptied.foreach(rel => fs.delete(new Path(s"${path(table)}/$rel"), true))
   }
 
   /** Swap every partition directory found under `tmp` into the live
-    * table with the crash-safe rename dance (see [[compact]]), then
-    * remove `tmp`. `depth` = number of partition columns (partition
-    * dirs sit that many levels under the root).
+    * table with the crash-safe rename dance (see [[swapTableDir]]),
+    * then remove `tmp`. `depth` = number of partition columns
+    * (partition dirs sit that many levels under the root).
     */
   private def swapPartitionDirs(table: String, tmp: Path, depth: Int): Unit = {
     def partitionDirs(base: Path, d: Int): Seq[Path] =
@@ -460,7 +548,7 @@ final class Warehouse(spark: SparkSession, val location: String) {
     // `<table>__old` transient): an in-table `p_date=…__old` dir would
     // make partition discovery choke on the unparseable partition value,
     // leaving the whole table unreadable after a crash mid-swap
-    val asideRoot = new Path(path(table) + "__old")
+    val asideRoot = new Path(path(table) + Warehouse.Aside)
     partitionDirs(tmp, depth).foreach { tmpPart =>
       val rel = fs.makeQualified(tmpPart).toString
         .stripPrefix(qtmp).stripPrefix("/")
@@ -487,116 +575,49 @@ final class Warehouse(spark: SparkSession, val location: String) {
     * batch rollback) the warehouse otherwise lacks: rows matching
     * `predicate` are removed; on a partitioned table ONLY the
     * partitions that actually contain matching rows rewrite (affected
-    * partition tuples are a bounded collect; the surviving slice is
-    * read partition-pruned and swapped per directory, crash-safe). A
-    * partition whose every row matches is deleted outright — the
-    * survivors write produces no dir for it, so it is removed rather
-    * than left stale. Returns the number of rows deleted.
+    * partition tuples are a bounded collect, rewritten by
+    * [[rewritePartitions]]). A partition whose every row matches is
+    * deleted outright. Returns the number of rows deleted.
     */
-  def deleteWhere(table: String, predicate: org.apache.spark.sql.Column): Long =
+  def deleteWhere(table: String, predicate: Column): Long =
       withTableLease(table, "deleteWhere") {
-    import org.apache.spark.sql.functions.{coalesce, col, lit}
-    val parts = readMeta(table).map(_.partitionBy).getOrElse(Nil)
-    val raw = readRaw(table)
+    import org.apache.spark.sql.functions.{coalesce, lit}
+    val meta = readMeta(table)
+    val parts = meta.map(_.partitionBy).getOrElse(Nil)
+    val raw = scan(table, meta)
     // SQL DELETE semantics: a NULL predicate does NOT delete — rows
     // where the predicate is unknown must survive (a targeted erase
     // must never take unrelated NULL-keyed rows with it)
     val hit = coalesce(predicate, lit(false))
     if (parts.isEmpty) {
-      val survivors = raw.filter(!hit)
-      val removed = raw.count() - survivors.count()
-      if (removed == 0L) return 0L
-      val tmp = new Path(path(table) + "__delete")
-      if (fs.exists(tmp)) fs.delete(tmp, true)
-      survivors.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-      swapTableDir(table, tmp, "deleteWhere")
+      val removed = raw.filter(hit).count()
+      if (removed > 0L) replaceTable(table, raw.filter(!hit))
       removed
     } else {
-      val matching = raw.filter(hit)
-      // bounded: one row per partition containing matches
-      val affected = matching.select(parts.map(col): _*).distinct().collect()
-      if (affected.isEmpty) return 0L
-      // <=> not ===: a NULL partition value (rows whose partition
-      // source was null) must still match its own collected tuple
-      val pred = affected.map { row =>
-        parts.zipWithIndex.map { case (p, i) => col(p) <=> lit(row.get(i)) }
-          .reduce(_ && _)
-      }.reduce(_ || _)
-      val slice = raw.filter(pred) // partition-pruned
-      val removed = slice.filter(hit).count()
-      val survivors = slice.filter(!hit)
-      val tmp = new Path(path(table) + "__delete")
-      if (fs.exists(tmp)) fs.delete(tmp, true)
-      survivors.repartition(parts.map(col): _*)
-        .write.mode(SaveMode.Overwrite).partitionBy(parts: _*)
-        .parquet(tmp.toString)
-      // a partition whose every row matched wrote NO survivor dir —
-      // the swap below would leave its old files live, so find them
-      // BEFORE the swap (which consumes tmp) and drop them after.
-      // Dir names must use Spark's OWN rendering — escapePathName for
-      // special chars (space, '=', '%', …), __HIVE_DEFAULT_PARTITION__
-      // for NULL — or a fully-deleted partition with such a value
-      // would silently keep its old files live under a name this code
-      // never computes. Values render through Catalyst's Cast-to-string
-      // with the session timezone, exactly as the partition writer
-      // does: external toString diverges for some types (e.g.
-      // java.sql.Timestamp appends '.0') and would misclassify every
-      // partition of such a column as fully gone.
-      val partTypes = parts.map(p => raw.schema(p).dataType)
-      def relOf(row: org.apache.spark.sql.Row): String =
-        parts.zipWithIndex.map { case (p, i) =>
-          import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
-          val rendered = Option(row.get(i)).map { v =>
-            Cast(Literal.create(v, partTypes(i)),
-              org.apache.spark.sql.types.StringType,
-              Option(spark.sessionState.conf.sessionLocalTimeZone))
-              .eval(null).toString
-          }.orNull
-          org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-            .getPartitionPathString(p, rendered)
-        }.mkString("/")
-      val fullyGone = affected
-        .filter(row => !fs.exists(new Path(s"$tmp/${relOf(row)}")))
-      // every fully-deleted partition must resolve to a live dir BEFORE
-      // the swap: if the rendering ever disagrees with what the writer
-      // produced, fail loudly instead of deleting a nonexistent path
-      // and reporting the rows erased (the GDPR-erase contract)
-      fullyGone.foreach { row =>
-        val live = new Path(s"${path(table)}/${relOf(row)}")
-        if (!fs.exists(live)) sys.error(
-          s"deleteWhere: partition dir for tuple ${relOf(row)} found " +
-            s"neither under the staged write nor the live table — " +
-            s"refusing to report rows deleted that would stay readable")
-      }
-      swapPartitionDirs(table, tmp, parts.size)
-      fullyGone.foreach { row =>
-        fs.delete(new Path(s"${path(table)}/${relOf(row)}"), true)
-      }
-      removed
+      // bounded: one row per partition containing matches, carrying
+      // its match count after the partition values
+      val affected = raw.filter(hit).groupBy(parts.map(col): _*).count()
+        .collect().toSeq
+      if (affected.nonEmpty)
+        rewritePartitions(table, raw, parts, Right(affected))(_.filter(!hit))
+      affected.map(_.getLong(parts.size)).sum
     }
   }
 
-  /** Crash-safe whole-directory swap shared by [[compact]],
-    * [[writeAudited]], [[deleteWhere]] and the unpartitioned
-    * [[merge]]: old data moves aside first, the staged copy renames
-    * into the live name, only then is the old copy deleted — a crash
-    * at any step leaves either the original or the replacement intact
-    * under the live name.
-    */
-  /** Atomically replace a table's contents with `df`: write to a
-    * working dir first, then the crash-safe rename dance. Because the
-    * working-dir write materializes `df` BEFORE the live dir moves,
-    * read-modify-replace pipelines whose `df` derives from the table
-    * itself (e.g. [[MatView.refresh]] merging new partials into the
-    * old state) never read a directory they are overwriting — the
-    * self-overwrite trap of a naive `SaveMode.Overwrite` on the
-    * input path.
+  /** Atomically replace a table's contents with `df`, in the table's
+    * recorded layout — the whole-table stage-and-swap every full
+    * rewrite goes through ([[compact]], unpartitioned [[merge]] and
+    * [[deleteWhere]]). Because the working-dir write materializes `df`
+    * BEFORE the live dir moves, read-modify-replace pipelines whose
+    * `df` derives from the table itself (e.g. [[MatView.refresh]]
+    * merging new partials into the old state) never read a directory
+    * they are overwriting — the self-overwrite trap of a naive
+    * `SaveMode.Overwrite` on the input path.
     */
   def replaceTable(table: String, df: DataFrame,
       extraFiles: Map[String, String] = Map.empty): Unit =
       withTableLease(table, "replaceTable") {
-    val tmp = new Path(path(table) + "__replace")
-    df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    val tmp = stage(table, df)
     // Underscore-named sidecars ride the same atomic rename as the
     // data (parquet readers skip `_`/`.` files) — a marker written
     // this way can never disagree with the contents it stamps.
@@ -605,7 +626,7 @@ final class Warehouse(spark: SparkSession, val location: String) {
       val out = fs.create(new Path(tmp, name), true)
       try out.write(content.getBytes("UTF-8")) finally out.close()
     }
-    swapTableDir(table, tmp, "replace")
+    swapTableDir(table, tmp, "replaceTable")
   }
 
   /** Stamp (or overwrite) a `_`-prefixed sidecar file into an EXISTING
@@ -670,9 +691,15 @@ final class Warehouse(spark: SparkSession, val location: String) {
     }
   }
 
+  /** Crash-safe whole-directory swap shared by [[replaceTable]],
+    * [[writeAudited]] and [[promoteTable]]: old data moves aside
+    * first, the staged copy renames into the live name, only then is
+    * the old copy deleted — a crash at any step leaves the original
+    * (live, or aside under `<table>__old`) or the replacement intact.
+    */
   private def swapTableDir(table: String, tmp: Path, op: String): Unit = {
     val cur = new Path(path(table))
-    val old = new Path(path(table) + "__old")
+    val old = new Path(path(table) + Warehouse.Aside)
     if (fs.exists(old)) fs.delete(old, true)
     val hadLive = fs.exists(cur)
     if (hadLive && !fs.rename(cur, old))
@@ -689,17 +716,18 @@ final class Warehouse(spark: SparkSession, val location: String) {
     * update path (`data_loader.py:681-728`) generalized from
     * insert-if-absent to update-or-insert.
     *
-    * Partitioned tables rewrite ONLY the partitions the updates touch:
-    * the affected partition values are collected from the updates
-    * frame (bounded by the number of touched partitions, not rows),
-    * the existing side is read partition-pruned, and the merged slice
-    * is swapped in per partition dir with the crash-safe rename dance
-    * — a 100 TB table with a one-day update rewrites one day.
-    * Contract for partitioned tables: an update row's derived
-    * partition value must equal the existing row's (true whenever the
-    * partition derives from an immutable event time); a row whose
-    * partition value changed would leave its old version in the old
-    * partition. Unpartitioned tables merge fully through a tmp + swap.
+    * Partitioned tables rewrite ONLY the partitions the updates touch
+    * ([[rewritePartitions]]): the affected partition values are
+    * collected from the updates frame (bounded by the number of
+    * touched partitions, not rows), the existing side is read
+    * partition-pruned — a NULL partition included — and the merged
+    * slice is swapped in per partition dir: a 100 TB table with a
+    * one-day update rewrites one day. Contract for partitioned
+    * tables: an update row's derived partition value must equal the
+    * existing row's (true whenever the partition derives from an
+    * immutable event time); a row whose partition value changed would
+    * leave its old version in the old partition. Unpartitioned tables
+    * merge fully through [[replaceTable]].
     */
   def merge(table: String, updates: DataFrame, keys: Seq[String]): Unit =
       withTableLease(table, "merge") {
@@ -707,29 +735,14 @@ final class Warehouse(spark: SparkSession, val location: String) {
     val meta = readMeta(table)
     val parts = meta.map(_.partitionBy).getOrElse(Nil)
     val upd = withDerived(updates, meta.flatMap(_.partitionSource))
-    val tmp = new Path(path(table) + "__merge")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    if (parts.isEmpty) {
-      Warehouse.mergeFrames(readRaw(table), upd, keys)
-        .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-      swapTableDir(table, tmp, "merge")
-    } else {
-      import org.apache.spark.sql.functions.col
-      val partCols = parts.map(col)
+    if (parts.isEmpty)
+      replaceTable(table, Warehouse.mergeFrames(scan(table, meta), upd, keys))
+    else {
       // bounded collect: one row per TOUCHED PARTITION, not per update
-      val affected = upd.select(partCols: _*).distinct().collect()
-      if (affected.isEmpty) return
-      val pred = affected.map { row =>
-        parts.zipWithIndex
-          .map { case (p, i) => col(p) === row.get(i) }
-          .reduce(_ && _)
-      }.reduce(_ || _)
-      val slice = readRaw(table).filter(pred) // partition-pruned scan
-      Warehouse.mergeFrames(slice, upd, keys)
-        .repartition(partCols: _*)
-        .write.mode(SaveMode.Overwrite).partitionBy(parts: _*)
-        .parquet(tmp.toString)
-      swapPartitionDirs(table, tmp, parts.size)
+      val affected = upd.select(parts.map(col): _*).distinct().collect().toSeq
+      if (affected.nonEmpty)
+        rewritePartitions(table, scan(table, meta), parts, Right(affected))(
+          Warehouse.mergeFrames(_, upd, keys))
     }
   }
 
@@ -747,8 +760,8 @@ final class Warehouse(spark: SparkSession, val location: String) {
   }
 
   /** All table names in this warehouse (directories under location).
-    * Transient `__compact`/`__old` directories a crashed [[compact]]
-    * may leave behind are working copies, not tables.
+    * Working dirs a crashed stage-and-swap may leave behind
+    * ([[Warehouse.TransientSuffixes]]) are not tables.
     */
   def listTables(): Seq[String] = {
     val root = new Path(location)
@@ -759,12 +772,12 @@ final class Warehouse(spark: SparkSession, val location: String) {
       .toSeq.sorted
   }
 
-  /** Remove crash debris: transient `__compact`/`__old`/`__merge`
-    * working dirs at the warehouse root and `__old` partition dirs
-    * left inside tables by an interrupted per-partition swap. The
-    * swap dances never leave the LIVE name incomplete, so everything
-    * matching a transient suffix is safe to delete. Returns the
-    * removed paths.
+  /** Remove crash debris: transient working dirs at the warehouse root
+    * ([[Warehouse.TransientSuffixes]]) and `__old` partition dirs
+    * left inside tables by an interrupted per-partition swap of
+    * earlier builds. The swap dances never leave the LIVE name
+    * incomplete, so everything matching a transient suffix is safe to
+    * delete. Returns the removed paths.
     */
   def vacuum(): Seq[String] = {
     val root = new Path(location)
@@ -779,7 +792,7 @@ final class Warehouse(spark: SparkSession, val location: String) {
       while (it.hasNext) {
         var d = it.next().getPath.getParent
         while (d != null && d.getName.nonEmpty) {
-          if (d.getName.endsWith("__old")) found += d
+          if (d.getName.endsWith(Warehouse.Aside)) found += d
           d = d.getParent
         }
       }
@@ -790,44 +803,33 @@ final class Warehouse(spark: SparkSession, val location: String) {
     all.map(_.toString)
   }
 
-  /** Write-audit-publish: land `df` in a staging directory, evaluate
-    * boolean AGGREGATE checks over the staged files (one job — e.g.
-    * `count(lit(1)) > 1000`, `count(when(col("v").isNull, 1)) === 0`),
-    * and only on all-green atomically swap the stage into the live
-    * name (same rename dance as [[compact]] — the table is never
-    * missing and never half-written). On any red check the stage is
-    * discarded and the LIVE TABLE IS UNTOUCHED — the property that
-    * matters when a bad upstream batch would otherwise corrupt a
-    * 100 TB table consumers are reading. Returns the failed check
-    * names (empty = published).
+  /** Write-audit-publish: land `df` in the table's working dir (in its
+    * recorded layout), evaluate boolean AGGREGATE checks over the
+    * staged files (one job — e.g. `count(lit(1)) > 1000`,
+    * `count(when(col("v").isNull, 1)) === 0`), and only on all-green
+    * atomically swap the stage into the live name ([[swapTableDir]] —
+    * the table is never missing and never half-written). On any red
+    * check the stage is discarded and the LIVE TABLE IS UNTOUCHED — the
+    * property that matters when a bad upstream batch would otherwise
+    * corrupt a 100 TB table consumers are reading. Returns the failed
+    * check names (empty = published).
     */
   def writeAudited(table: String, df: DataFrame,
-      checks: Map[String, org.apache.spark.sql.Column]): Seq[String] = {
+      checks: Map[String, Column]): Seq[String] =
+      withTableLease(table, "writeAudited") {
     require(checks.nonEmpty, "writeAudited needs at least one check")
-    // the stage writes a FLAT layout: publishing over a table whose
-    // meta declares partitioning would leave partition-branch readers
-    // (merge/compactPartitions) pointed at files with no partition
-    // dirs — refuse rather than corrupt
-    readMeta(table).foreach { m =>
-      require(m.partitionBy.isEmpty && m.partitionSource.isEmpty,
-        s"writeAudited: $table is partitioned (${m.partitionBy}); " +
-          "stage-and-swap of a flat layout would corrupt it")
-    }
-    val stage = new Path(path(table) + "__stage")
-    if (fs.exists(stage)) fs.delete(stage, true) // prior crash debris
-    df.write.mode(SaveMode.Overwrite).parquet(stage.toString)
+    val tmp = stage(table, df)
     // audit the files that would go live, not the input plan — this
     // also catches write-path corruption, not just bad data
-    val staged = spark.read.parquet(stage.toString)
     val named = checks.toSeq
-    val row = staged.agg(named.head._2.as(named.head._1),
+    val row = spark.read.parquet(tmp.toString).agg(named.head._2.as(named.head._1),
       named.tail.map { case (n, c) => c.as(n) }: _*).collect().head
     val failed = named.map(_._1).filterNot(row.getAs[Boolean])
     if (failed.nonEmpty) {
-      fs.delete(stage, true)
+      fs.delete(tmp, true)
       return failed
     }
-    swapTableDir(table, stage, "writeAudited")
+    swapTableDir(table, tmp, "writeAudited")
     writeSchema(table, df.schema)
     Nil
   }
@@ -937,10 +939,20 @@ object Warehouse {
   /** Name of the derived date-partition column (see createTable). */
   val DerivedDateCol = "p_date"
 
-  /** Working-dir suffixes of the crash-safe swap dances — hidden from
-    * [[Warehouse.listTables]], removed by [[Warehouse.vacuum]]. */
+  /** Suffix of a table's working dir: every stage-and-swap writes its
+    * staged copy there before the swap. */
+  private val Stage = "__stage"
+
+  /** Suffix of the dir a live copy moves aside to during a swap. */
+  private val Aside = "__old"
+
+  /** Every working-dir suffix — hidden from [[Warehouse.listTables]],
+    * removed by [[Warehouse.vacuum]] and by the table's next stage.
+    * The last four are where earlier builds staged compact, merge,
+    * deleteWhere and replaceTable: a crash they left behind is still
+    * debris, not a table. */
   val TransientSuffixes: Seq[String] =
-    Seq("__compact", "__old", "__merge", "__stage", "__delete")
+    Seq(Stage, Aside, "__compact", "__merge", "__delete", "__replace")
 
   /** Frame-level SCD1 merge: `updates` rows win over `existing` rows
     * with the same key; unmatched existing rows survive, unmatched
@@ -951,7 +963,7 @@ object Warehouse {
   def mergeFrames(existing: DataFrame, updates: DataFrame,
       keys: Seq[String]): DataFrame = {
     require(keys.nonEmpty, "merge needs at least one key column")
-    existing.join(updates.select(keys.map(org.apache.spark.sql.functions.col): _*),
+    existing.join(updates.select(keys.map(col): _*),
         keys, "left_anti")
       .unionByName(updates)
   }

@@ -85,7 +85,38 @@ object StreamIngest {
   def mergeStream(df: DataFrame, warehouse: graft.store.Warehouse,
       table: String, keys: Seq[String], timeCol: Option[String],
       checkpoint: String,
-      trigger: Trigger = Trigger.AvailableNow()): Unit = {
+      trigger: Trigger = Trigger.AvailableNow()): Unit =
+    mergeLatest(df, warehouse, table, keys, timeCol, checkpoint, trigger)(
+      warehouse.merge(table, _, keys))
+
+  /** [[mergeStream]] THROUGH the view layer: each micro-batch's
+    * latest-per-key rows MERGE via [[graft.pipeline.Orchestrator.merge]],
+    * so every registered [[graft.store.MatView]] folds the exact
+    * mutation (retracted pre-images + new rows) — a live rollup over a
+    * CDC-maintained table stays ≡ one-shot instead of drifting the way
+    * the direct warehouse merge lets it (the count-based syncViews
+    * detector is blind to count-preserving updates by design, so the
+    * drift would be silent AND permanent). Crash safety is inherited
+    * twice over: Orchestrator.merge journals the pinned mutation
+    * before the base rewrite (a died fold replays as a view rebuild),
+    * and a replayed micro-batch re-merges the same latest-per-key rows
+    * into an already-merged base — an empty effective mutation.
+    */
+  def mergeStreamViews(df: DataFrame, pipe: graft.pipeline.Orchestrator,
+      table: String, keys: Seq[String], timeCol: Option[String],
+      checkpoint: String,
+      trigger: Trigger = Trigger.AvailableNow()): Unit =
+    mergeLatest(df, pipe.warehouse, table, keys, timeCol, checkpoint,
+      trigger)(pipe.merge(table, _, keys))
+
+  /** The body of [[mergeStream]] and [[mergeStreamViews]]: each
+    * micro-batch collapses to its latest row per key, creates `table`
+    * in `warehouse` on first sight, and goes to `merge`.
+    */
+  private def mergeLatest(df: DataFrame, warehouse: graft.store.Warehouse,
+      table: String, keys: Seq[String], timeCol: Option[String],
+      checkpoint: String, trigger: Trigger)(
+      merge: DataFrame => Unit): Unit = {
     val q = df.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
@@ -106,48 +137,7 @@ object StreamIngest {
         if (!warehouse.tableExists(table))
           warehouse.createTable(table, latest.schema, uniqueKeys = keys,
             partitionSource = timeCol.filter(keys.contains))
-        warehouse.merge(table, latest, keys)
-        ()
-      }
-      .start()
-    q.awaitTermination()
-  }
-
-  /** [[mergeStream]] THROUGH the view layer: each micro-batch's
-    * latest-per-key rows MERGE via [[graft.pipeline.Orchestrator.merge]],
-    * so every registered [[graft.store.MatView]] folds the exact
-    * mutation (retracted pre-images + new rows) — a live rollup over a
-    * CDC-maintained table stays ≡ one-shot instead of drifting the way
-    * the direct warehouse merge lets it (the count-based syncViews
-    * detector is blind to count-preserving updates by design, so the
-    * drift would be silent AND permanent). Crash safety is inherited
-    * twice over: Orchestrator.merge journals the pinned mutation
-    * before the base rewrite (a died fold replays as a view rebuild),
-    * and a replayed micro-batch re-merges the same latest-per-key rows
-    * into an already-merged base — an empty effective mutation.
-    */
-  def mergeStreamViews(df: DataFrame, pipe: graft.pipeline.Orchestrator,
-      table: String, keys: Seq[String], timeCol: Option[String],
-      checkpoint: String,
-      trigger: Trigger = Trigger.AvailableNow()): Unit = {
-    val q = df.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val latest = timeCol match {
-          case Some(tc) =>
-            val w = org.apache.spark.sql.expressions.Window
-              .partitionBy(keys.map(col): _*).orderBy(col(tc).desc)
-            batch.withColumn("__rn", row_number().over(w))
-              .filter(col("__rn") === 1).drop("__rn")
-          case None => batch.dropDuplicates(keys)
-        }
-        if (!pipe.warehouse.tableExists(table))
-          pipe.warehouse.createTable(table, latest.schema,
-            uniqueKeys = keys,
-            partitionSource = timeCol.filter(keys.contains))
-        pipe.merge(table, latest, keys)
+        merge(latest)
         ()
       }
       .start()

@@ -87,7 +87,7 @@ class LoaderSpec extends SparkSpec {
 
     // the pruned existing side plans a partition filter on p_date and
     // physically reads fewer files than the table holds
-    val pruned = loader.timeFilteredExisting("raw", "timestamp",
+    val pruned = wh.readTimeRange("raw", "timestamp",
       ts("2016-02-01 00:00:00"), ts("2016-02-01 00:00:00"))
     val planStr = pruned.queryExecution.executedPlan.toString
     assert(planStr.contains("PartitionFilters"), planStr)

@@ -108,4 +108,28 @@ class SnapshotDiffSpec extends SparkSpec {
     assert(byChange("delete") === 6)  // 500/97 -> ids 0,97,194,291,388,485
     assert(byChange("update") > 0)
   }
+
+  test("applyChangesTable keeps a date-partitioned layout: later appends read back") {
+    import java.sql.Timestamp
+    val dir = java.nio.file.Files.createTempDirectory("graft_sd").toString
+    val wh = new Warehouse(spark, dir)
+    val rows = Seq((1L, Timestamp.valueOf("2024-01-01 10:00:00"), 1.0),
+      (2L, Timestamp.valueOf("2024-01-02 10:00:00"), 2.0))
+    val df = rows.toDF("id", "timestamp", "v")
+    wh.createTable("t", df.schema, uniqueKeys = Seq("id"),
+      partitionSource = Some("timestamp"))
+    wh.append("t", df)
+    val after = Seq((1L, Timestamp.valueOf("2024-01-01 10:00:00"), 10.0),
+      (2L, Timestamp.valueOf("2024-01-02 10:00:00"), 2.0))
+      .toDF("id", "timestamp", "v")
+    SnapshotDiff.applyChangesTable(wh, "t",
+      SnapshotDiff.changes(wh.read("t"), after, Seq("id")), Seq("id"))
+    wh.append("t", Seq((3L, Timestamp.valueOf("2024-01-03 10:00:00"), 3.0))
+      .toDF("id", "timestamp", "v"))
+    val top = new java.io.File(s"$dir/t").list().toSeq
+      .filterNot(n => n.startsWith("_") || n.startsWith("."))
+    assert(top.nonEmpty && top.forall(_.startsWith("p_date=")), top)
+    assert(wh.read("t").select("id", "v").as[(Long, Double)].collect()
+      .sorted.toSeq === Seq((1L, 10.0), (2L, 2.0), (3L, 3.0)))
+  }
 }

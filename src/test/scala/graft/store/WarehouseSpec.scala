@@ -182,12 +182,13 @@ class WarehouseSpec extends SparkSpec {
     // simulate crash debris from compact/merge dances
     new java.io.File(s"$dir/t__merge").mkdirs()
     new java.io.File(s"$dir/t__compact").mkdirs()
+    new java.io.File(s"$dir/t__replace").mkdirs()
     new java.io.File(s"$dir/zombie__old").mkdirs()
     new java.io.File(s"$dir/t/p_date=2024-01-01__old").mkdirs()
     new java.io.File(s"$dir/t/p_date=2024-01-01__old/x.parquet").createNewFile()
     assert(wh.listTables() === Seq("t")) // transients never listed
     val removed = wh.vacuum()
-    assert(removed.size === 4, removed)
+    assert(removed.size === 5, removed)
     assert(!new java.io.File(s"$dir/t__merge").exists())
     assert(!new java.io.File(s"$dir/t/p_date=2024-01-01__old").exists())
     assert(wh.read("t").count() === 1) // live data untouched
@@ -316,6 +317,45 @@ class WarehouseSpec extends SparkSpec {
     assert(wh.tableStats("t").numRows === 200)
     assert(wh.read("t").filter(col("g") === "g1").count() === 50)
     assert(wh.listTables() === Seq("t")) // no working dirs leak
+  }
+
+  test("a freshly created unpartitioned table reads empty with its schema and holds no files") {
+    val wh = fresh()
+    wh.createTable("t", schema)
+    assert(wh.read("t").schema === schema)
+    assert(wh.read("t").count() === 0)
+    assert(wh.tableStats("t") === TableStats("t", 0L, 0L, 0))
+    wh.append("t", Seq((1L, 1.0)).toDF("id", "v"))
+    assert(wh.read("t").as[(Long, Double)].collect().toSeq === Seq((1L, 1.0)))
+  }
+
+  test("merge keeps the other rows of a NULL partition it updates") {
+    val wh = fresh()
+    val gSchema = StructType(Seq(StructField("id", LongType),
+      StructField("g", StringType), StructField("v", DoubleType)))
+    wh.createTable("t", gSchema, partitionBy = Seq("g"), uniqueKeys = Seq("id"))
+    wh.append("t", Seq((1L, Some("a"), 1.0), (2L, None, 2.0), (3L, None, 3.0))
+      .toDF("id", "g", "v"))
+    wh.merge("t", Seq((2L, Option.empty[String], 20.0)).toDF("id", "g", "v"),
+      Seq("id"))
+    val got = wh.read("t").select("id", "g", "v")
+      .as[(Long, Option[String], Double)].collect().sortBy(_._1).toSeq
+    assert(got === Seq((1L, Some("a"), 1.0), (2L, None, 20.0), (3L, None, 3.0)))
+  }
+
+  test("merge into a freshly created date-partitioned table inserts its rows") {
+    import java.sql.Timestamp
+    val wh = fresh()
+    val tsSchema = StructType(Seq(
+      StructField("id", LongType), StructField("timestamp", TimestampType),
+      StructField("v", DoubleType)))
+    wh.createTable("t", tsSchema, uniqueKeys = Seq("id"),
+      partitionSource = Some("timestamp"))
+    wh.merge("t", Seq((1L, Timestamp.valueOf("2024-01-01 10:00:00"), 1.0))
+      .toDF("id", "timestamp", "v"), Seq("id"))
+    assert(wh.read("t").select("id", "v").as[(Long, Double)].collect()
+      .toSeq === Seq((1L, 1.0)))
+    assert(wh.readRaw("t").columns.contains(Warehouse.DerivedDateCol))
   }
 
   test("unique keys + partitioning persist in table meta") {

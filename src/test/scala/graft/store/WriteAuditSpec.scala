@@ -46,4 +46,21 @@ class WriteAuditSpec extends SparkSpec {
     assert(failed === Seq("full"))
     assert(w.read("t").count() === 100)
   }
+
+  test("a date-partitioned table publishes in its own layout") {
+    import java.sql.Timestamp
+    val dir = Files.createTempDirectory("graft_wap_p").toString
+    val w = new Warehouse(spark, dir)
+    val df = Seq((1L, Timestamp.valueOf("2024-01-01 10:00:00")),
+      (2L, Timestamp.valueOf("2024-01-02 10:00:00"))).toDF("id", "timestamp")
+    w.createTable("t", df.schema, partitionSource = Some("timestamp"))
+    assert(w.writeAudited("t", df, Map("nonempty" -> (count(lit(1)) > 0))).isEmpty)
+    w.append("t", Seq((3L, Timestamp.valueOf("2024-01-03 10:00:00")))
+      .toDF("id", "timestamp"))
+    val top = new java.io.File(s"$dir/t").list().toSeq
+      .filterNot(n => n.startsWith("_") || n.startsWith("."))
+    assert(top.sorted === Seq("p_date=2024-01-01", "p_date=2024-01-02",
+      "p_date=2024-01-03"))
+    assert(w.read("t").count() === 3)
+  }
 }

@@ -45,6 +45,11 @@ class WriterLeaseSpec extends SparkSpec {
     intercept[IllegalStateException] {
       wh.replaceTable("t", Seq((9L, "x")).toDF("k", "v"))
     }
+    intercept[IllegalStateException] {
+      wh.writeAudited("t", Seq((9L, "x")).toDF("k", "v"),
+        Map("nonempty" -> (count(lit(1)) > 0)))
+    }
+    assert(wh.read("t").count() === 2) // the table was not touched
   }
 
   test("a crash-stale lease is taken over and the mutation proceeds") {

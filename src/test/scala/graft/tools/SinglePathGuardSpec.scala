@@ -9,6 +9,7 @@ import scala.jdk.CollectionConverters._
   * keep their own builders), and native kernels are checked for once,
   * in `SparkEnv` — a per-call `functionExists` / active-session probe
   * is how a composed-builtin second implementation creeps back in.
+  * The `p_date` table layout is likewise Warehouse's alone.
   */
 class SinglePathGuardSpec extends AnyFunSuite {
 
@@ -39,5 +40,10 @@ class SinglePathGuardSpec extends AnyFunSuite {
       val extra = filesUsing(needle) - "SparkEnv.scala"
       assert(extra.isEmpty, s"$needle outside SparkEnv: $extra")
     }
+  }
+
+  test("the derived date-partition layout is known only to Warehouse") {
+    val extra = filesUsing("DerivedDateCol") - "Warehouse.scala"
+    assert(extra.isEmpty, s"DerivedDateCol outside Warehouse: $extra")
   }
 }
